@@ -580,3 +580,36 @@ def test_sat_fast_path_adversarial_rings(spark):
     got = _pairs(spatial_join.spatial_join(imgs, aois, res=8))
     exp = _pairs(spatial_join.spatial_join_bruteforce(imgs, aois))
     assert got == exp
+
+
+def test_refine_verdict_cache_eviction_keeps_hits(monkeypatch):
+    """A refine chunk that mixes cached verdicts (hits) with new pairs
+    (misses) must survive the cache eviction: the hits' verdicts are
+    still readable after the cache is cleared (no KeyError)."""
+    import pyarrow as pa
+
+    from ukis_pysat_spark.operators import arrowio
+
+    monkeypatch.setattr(spatial_join, "VERDICT_CACHE_MAX", 2)
+    monkeypatch.setattr(arrowio, "CHUNK_ROWS", 3)
+
+    def batch(pairs):
+        # footprint k: the unit square at lon 10k; its AOI triangle sits
+        # inside it (hit) or 4 degrees east of it (miss)
+        fx = [[10.0 * k, 10.0 * k + 1, 10.0 * k + 1, 10.0 * k] for k, _ in pairs]
+        ax = [[10.0 * k + (0.2 if hit else 5), 10.0 * k + (0.8 if hit else 6),
+               10.0 * k + (0.5 if hit else 5.5)] for k, hit in pairs]
+        return pa.RecordBatch.from_pydict({
+            "image_id": [f"img{k}" for k, _ in pairs],
+            "aoi_id": [f"aoi{k}{'h' if hit else 'm'}" for k, hit in pairs],
+            "footprint_lon": fx,
+            "footprint_lat": [[0.0, 0.0, 1.0, 1.0]] * len(pairs),
+            "ring_lon": ax,
+            "ring_lat": [[0.2, 0.2, 0.8]] * len(pairs),
+        })
+
+    first = batch([(0, True), (1, False), (2, True)])  # 3 misses: cache > max
+    mixed = batch([(0, True), (3, True), (4, False)])  # 1 hit + 2 misses
+    out = pa.Table.from_batches(list(spatial_join._refine_batches(iter([first, mixed]))))
+    got = list(zip(out.column("image_id").to_pylist(), out.column("aoi_id").to_pylist()))
+    assert got == [("img0", "aoi0h"), ("img2", "aoi2h"), ("img0", "aoi0h"), ("img3", "aoi3h")]

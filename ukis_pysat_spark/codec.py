@@ -3,7 +3,7 @@
 The reference keeps pixels as an eagerly-materialized numpy array backed
 by an in-memory GTiff (ukis_pysat/raster.py:49,189-213).  In this engine
 pixels live *encoded* in a ``bytes BINARY`` column and are decoded only
-inside Arrow-batched UDFs on executors.  GDAL/rasterio/PIL are not
+inside the row-wise Arrow stages of operators/arrowio.py on executors.  GDAL/rasterio/PIL are not
 available in the target environment, so the codec is pure numpy + zlib:
 
 - ``raw``  : 20-byte header + C-order band-first array, little-endian.
@@ -123,9 +123,10 @@ def encode(arr: np.ndarray, fmt: str = "raw") -> bytes:
 
 def encode_chunks(arr: np.ndarray, fmt: str = "raw") -> tuple[bytes, np.ndarray]:
     """(header bytes, body uint8 array) without materializing one joined
-    bytes object — bulk Arrow emitters (operators/arrowio.py) append the
-    two chunks into a shared buffer, so the raw path costs ZERO payload
-    copies here (the body is a view of the input array)."""
+    bytes object — an Arrow stage (operators/arrowio.py) takes the tuple
+    as one payload and copies both parts straight into its output
+    buffer, so the raw path costs ZERO payload copies here (the body is
+    a view of the input array)."""
     arr = promote_3d(np.ascontiguousarray(arr))
     if np.dtype(arr.dtype.name) not in _DTYPE_CODE:
         raise ValueError(f"unsupported dtype {arr.dtype}")

@@ -1,236 +1,316 @@
-"""Arrow-native emitter for image-row stages (the `_TileBuf` pattern of
-operators/tiling.py applied to the full images schema).
+"""The engine's one Arrow-stage contract: every row-wise Python stage
+runs through this module, and it is the only code that calls
+``mapInArrow`` (the dedup segmented verify aside).
 
-Every payload-emitting stage used to build per-row dicts with Python
-``bytes`` payloads into pandas object columns inside ``mapInPandas`` —
-pandas block assembly plus one bytes object per image was the dominant
-constant on pixel-emitting pipelines (removing it took tile_pixels from
-22 s to ~5 s).  This module gives apply_transforms / dn2toa /
-cast_images the same treatment:
+A stage is a row function plus the output ``pa.schema`` it declares
+once; the Spark DDL handed to ``mapInArrow`` is derived from that
+schema (:func:`ddl`).
 
-- the stage runs as ``mapInArrow``;
-- each output payload is appended as (header, body) uint8 chunks into a
-  shared buffer; one contiguous ``values`` buffer + an int32 offsets
-  cumsum becomes the Arrow binary column directly (zero per-row bytes
-  objects, and for fmt='raw' zero payload copies before the flush);
-- the small metadata columns ride as plain Python lists -> pa.array
-  (one value per IMAGE, negligible next to the payload).
+Input (:func:`rows`): per Arrow batch, small columns convert to Python
+lists once; every binary column reaches the row as a zero-copy
+``pyarrow.Buffer`` view, however many there are.  A column named in
+``views`` is wrapped once per batch by its factory and indexed per row,
+so nested list columns stay Arrow for the stages that read them in
+place.
 
-Flushes are bounded by payload bytes, independent of the input batch
-size, so worker memory stays flat however large the images are.
+Output (:class:`PayloadBuf`): the row function yields chunks, dicts of
+output column -> value.  A value is either one value repeated over the
+chunk's rows (a scalar, or a list for a list-typed column) or one value
+per row (a list, numpy array or pyarrow Array).  A binary column takes
+one payload — bytes-like, a numpy array, or a tuple of parts such as
+``codec.encode_chunks`` returns — or :class:`Packed` payloads laid end
+to end.  Each binary column is built from one (offsets, values) buffer
+pair: no per-row bytes objects, and for raw payloads no copy before the
+flush.
+
+Flush: an output batch leaves once it holds FLUSH_BYTES of payload or
+FLUSH_ROWS rows, independent of the input batch size, so worker memory
+stays flat however large the images are; a binary column past the
+int32-offset limit raises instead of wrapping.
+
+Stages that vectorize over many rows at once (the exact refines of the
+spatial join) accumulate their input with :func:`chunked` instead.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+import itertools
+from typing import Callable, Iterable, Iterator, NamedTuple
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from ukis_pysat_spark import codec
+FLUSH_BYTES = 64 << 20  # payload bytes per output batch
+FLUSH_ROWS = 1 << 20  # rows per output batch
+MAX_PAYLOAD_BYTES = (1 << 31) - 1  # pa.binary() carries int32 offsets
+CHUNK_ROWS = 1 << 16  # input rows per call of a chunked stage
 
-# column order is the engine's images schema (datagen.IMAGES_SCHEMA /
-# transforms.IMAGES_OUT_SCHEMA); 'bytes' is the payload column
-META_COLS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-             "bands", "dtype", "crs", "transform", "nodata",
-             "footprint_lon", "footprint_lat", "platform"]
-
-IMAGES_OUT_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, "
-    "caption string, phash long, bands int, dtype string, crs string, "
-    "transform array<double>, nodata double, "
-    "footprint_lon array<double>, footprint_lat array<double>, "
-    "platform string"
+# the engine's images table; 'bytes' is the payload column
+IMAGES_SCHEMA = pa.schema(
+    [
+        ("image_id", pa.string()),
+        ("bytes", pa.binary()),
+        ("w", pa.int32()),
+        ("h", pa.int32()),
+        ("fmt", pa.string()),
+        ("caption", pa.string()),
+        ("phash", pa.int64()),
+        ("bands", pa.int32()),
+        ("dtype", pa.string()),
+        ("crs", pa.string()),
+        ("transform", pa.list_(pa.float64())),
+        ("nodata", pa.float64()),
+        ("footprint_lon", pa.list_(pa.float64())),
+        ("footprint_lat", pa.list_(pa.float64())),
+        ("platform", pa.string()),
+    ]
+)
+META_COLS = IMAGES_SCHEMA.names
+# a raster product's payload + grid metadata (no catalog columns)
+RASTER_SCHEMA = pa.schema(
+    [IMAGES_SCHEMA.field(n) for n in
+     ("image_id", "bytes", "w", "h", "fmt", "bands", "dtype", "crs", "transform", "nodata")]
 )
 
-_PA_TYPES = {
-    "image_id": pa.string(),
-    "w": pa.int32(),
-    "h": pa.int32(),
-    "fmt": pa.string(),
-    "caption": pa.string(),
-    "phash": pa.int64(),
-    "bands": pa.int32(),
-    "dtype": pa.string(),
-    "crs": pa.string(),
-    "transform": pa.list_(pa.float64()),
-    "nodata": pa.float64(),
-    "footprint_lon": pa.list_(pa.float64()),
-    "footprint_lat": pa.list_(pa.float64()),
-    "platform": pa.string(),
-}
-
-_PA_SCHEMA = pa.schema(
-    [("image_id", pa.string()), ("bytes", pa.binary())]
-    + [(n, _PA_TYPES[n]) for n in META_COLS[2:]]
-)
-
-
-class PayloadBuf:
-    """Accumulates rows of an arbitrary (meta..., one binary payload)
-    schema; flushes ONE RecordBatch whose payload column is built from
-    (offsets, values) buffers — zero per-row bytes objects.
-
-    `fields` is the full output field list in order, as (name, pyarrow
-    type) pairs; exactly one field named `payload_name` is the binary
-    payload column (its declared type is ignored — it is always
-    pa.binary())."""
-
-    def __init__(self, fields, payload_name: str = "bytes") -> None:
-        self.fields = list(fields)
-        self.payload_name = payload_name
-        self.types = {n: t for n, t in self.fields}
-        self.meta: dict[str, list] = {
-            n: [] for n, _ in self.fields if n != payload_name
-        }
-        self.schema = pa.schema(
-            [(n, pa.binary() if n == payload_name else t) for n, t in self.fields]
-        )
-        self.chunks: list[np.ndarray] = []  # header/body uint8 chunks
-        self.sizes: list[int] = []  # total payload bytes per row
-        self.n = 0
-        self.nbytes = 0
-
-    def add(self, d: dict, header: bytes, body: np.ndarray) -> None:
-        for k in self.meta:
-            self.meta[k].append(d[k])
-        self.chunks.append(np.frombuffer(header, dtype=np.uint8))
-        self.chunks.append(body)
-        size = len(header) + body.nbytes
-        self.sizes.append(size)
-        self.n += 1
-        self.nbytes += size
-
-    def flush(self) -> pa.RecordBatch:
-        if self.nbytes >= (1 << 31):  # pa.binary() carries int32 offsets
-            raise ValueError(
-                "image batch exceeds 2 GiB of payload; lower flush_bytes "
-                "(a single image's payload must fit one batch)"
-            )
-        offsets = np.empty(self.n + 1, dtype=np.int32)
-        offsets[0] = 0
-        np.cumsum(np.asarray(self.sizes, dtype=np.int64), out=offsets[1:])
-        values = np.concatenate(self.chunks) if self.chunks else np.empty(0, np.uint8)
-        px = pa.Array.from_buffers(
-            pa.binary(), self.n, [None, pa.py_buffer(offsets), pa.py_buffer(values)]
-        )
-        arrays = [
-            px if n == self.payload_name else pa.array(self.meta[n], type=self.types[n])
-            for n, _ in self.fields
-        ]
-        return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
-
-
-class ImagesBuf(PayloadBuf):
-    """PayloadBuf specialized to the engine's full images schema."""
-
-    def __init__(self) -> None:
-        super().__init__(
-            [("image_id", pa.string()), ("bytes", pa.binary())]
-            + [(n, _PA_TYPES[n]) for n in META_COLS[2:]]
-        )
-
-
-# row_fn contract: dict (python values; 'bytes' is a buffer-protocol
-# object) -> (meta dict WITHOUT payload, pixel array, fmt string)
-RowFn = Callable[[dict], tuple[dict, np.ndarray, str]]
-
-
-def map_image_rows(
-    images: DataFrame,
-    in_cols: list[str],
-    row_fn: RowFn,
-    flush_bytes: int = 64 << 20,
-) -> DataFrame:
-    """Run `row_fn` over every image row and emit images-schema rows
-    through the Arrow-native buffer (one decode + one encode per row,
-    no pandas in the loop)."""
-
-    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf = ImagesBuf()
-        for batch in batches:
-            # bulk C-side conversion of the small columns; the payload
-            # column stays Arrow so each row is a zero-copy buffer view
-            names = [n for n in batch.schema.names if n != "bytes"]
-            lists = [batch.column(n).to_pylist() for n in names]
-            payload = batch.column("bytes") if "bytes" in batch.schema.names else None
-            for ri in range(batch.num_rows):
-                row = {n: ls[ri] for n, ls in zip(names, lists)}
-                if payload is not None:
-                    row["bytes"] = payload[ri].as_buffer()
-                d, arr, fmt = row_fn(row)
-                header, body = codec.encode_chunks(arr, fmt)
-                buf.add(d, header, body)
-                if buf.nbytes >= flush_bytes:
-                    yield buf.flush()
-                    buf = ImagesBuf()
-        if buf.n:
-            yield buf.flush()
-
-    return images.select(*in_cols).mapInArrow(emit, schema=IMAGES_OUT_SCHEMA)
-
-
-_DDL_OF_PA = {
+_DDL = {
     pa.string(): "string",
     pa.binary(): "binary",
     pa.int32(): "int",
-    pa.int64(): "long",
-    pa.float32(): "float",
+    pa.int64(): "bigint",
     pa.float64(): "double",
-    pa.list_(pa.float64()): "array<double>",
 }
 
 
-def _ddl(fields) -> str:
-    return ", ".join(f"{n} {_DDL_OF_PA[t]}" for n, t in fields)
+def _ddl_type(t: pa.DataType) -> str:
+    if pa.types.is_list(t):
+        return f"array<{_ddl_type(t.value_type)}>"
+    return _DDL[t]
 
 
-# rows_fn contract: dict (python values; 'bytes' is a buffer-protocol
-# object) -> iterable of (meta dict WITHOUT payload, pixel array, fmt)
-# — zero, one, or many output rows per input row (flatMap).
-RowsFn = Callable[[dict], "Iterator[tuple[dict, np.ndarray, str]]"]
+def ddl(schema: pa.Schema) -> str:
+    """Spark DDL of a declared Arrow schema."""
+    return ", ".join(f"`{f.name}` {_ddl_type(f.type)}" for f in schema)
 
 
-def flat_map_payload_rows(
-    images: DataFrame,
-    in_cols: list[str],
-    rows_fn: RowsFn,
-    fields: list,
-    payload_name: str = "bytes",
-    flush_bytes: int = 64 << 20,
-    in_payload: str | None = None,
+StageFn = Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
+
+
+def run(df: DataFrame, stage: StageFn, schema: pa.Schema) -> DataFrame:
+    """Run a stage function as ONE mapInArrow emitting `schema`."""
+    return df.mapInArrow(stage, schema=ddl(schema))
+
+
+def map_rows(
+    df: DataFrame,
+    row_fn: Callable,
+    schema: pa.Schema,
+    views: dict | None = None,
+    per_partition: bool = False,
 ) -> DataFrame:
-    """Generalized Arrow-native emitter: run `rows_fn` over every input
-    row (1 -> N output rows) and emit rows of the caller-declared
-    (meta..., payload binary) schema through a PayloadBuf — same
-    zero-per-row-bytes discipline as map_image_rows, with flushes
-    bounded by payload size, not input batch size.
+    """``run(df, rows(...))``: the row-wise stage over every row of df."""
+    return run(df, rows(row_fn, schema, views, per_partition), schema)
 
-    `in_payload` names the INPUT payload column handed to `rows_fn` as a
-    zero-copy buffer view; it defaults to `payload_name` so a caller that
-    renames the payload column keeps the no-bytes-objects path on input
-    too (pass explicitly when input and output payload names differ)."""
-    fields = [(n, t) for n, t in fields]
-    src = payload_name if in_payload is None else in_payload
 
-    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf = PayloadBuf(fields, payload_name)
+class Packed(NamedTuple):
+    """n payloads laid end to end in one uint8 array; `sizes` is one
+    size shared by every payload or an array of per-payload sizes."""
+
+    values: np.ndarray
+    sizes: int | np.ndarray
+
+
+def _u8(v) -> np.ndarray:
+    if isinstance(v, np.ndarray):
+        return np.ascontiguousarray(v).view(np.uint8).reshape(-1)
+    return np.frombuffer(v, dtype=np.uint8)
+
+
+def _payloads(v) -> tuple[list, int | np.ndarray, int]:
+    """(uint8 chunks, size, 1) of one payload, or (chunks, sizes, n) of
+    n Packed payloads."""
+    if isinstance(v, Packed):
+        data = _u8(v.values)
+        if isinstance(v.sizes, np.ndarray):
+            sizes = v.sizes.astype(np.int64, copy=False)
+        else:
+            sizes = np.full(data.size // v.sizes, v.sizes, np.int64)
+        return [data], sizes, sizes.size
+    data = [_u8(p) for p in v] if isinstance(v, tuple) else [_u8(v)]
+    return data, sum(d.size for d in data), 1
+
+
+_SCALAR, _NUMPY, _LIST, _ARROW = range(4)
+
+
+def _kind(v, list_typed: bool) -> int:
+    if isinstance(v, pa.Array):
+        return _ARROW
+    if list_typed:
+        return _SCALAR
+    if isinstance(v, np.ndarray):
+        return _NUMPY
+    return _LIST if isinstance(v, list) else _SCALAR
+
+
+class PayloadBuf:
+    """Output rows of one declared schema, appended chunk by chunk and
+    flushed as ONE RecordBatch (the module docstring lists the chunk
+    values it accepts)."""
+
+    def __init__(self, schema: pa.Schema) -> None:
+        self.schema = schema
+        # per-field flags as plain lists: pa.Schema iteration builds a
+        # wrapper object per field, which per chunk costs more than the
+        # append itself
+        self.names = schema.names
+        self.binary = [pa.types.is_binary(t) for t in schema.types]
+        self.list_typed = [pa.types.is_list(t) for t in schema.types]
+        self._reset()
+
+    def _reset(self) -> None:
+        self.kinds: list[list] = [[] for _ in self.names]  # per chunk
+        self.vals: list[list] = [[] for _ in self.names]  # per chunk
+        self.counts: list[int] = []  # rows per chunk
+        self.n = 0
+        self.nbytes = 0
+
+    def add(self, chunk: dict) -> None:
+        n = None
+        cols = zip(self.names, self.binary, self.list_typed, self.kinds, self.vals)
+        for name, b, lt, kinds, vals in cols:
+            v = chunk[name]
+            if b:
+                data, sizes, k = _payloads(v)
+                vals.append((data, sizes))
+                self.nbytes += sum(d.size for d in data)
+            else:
+                kind = _kind(v, lt)
+                kinds.append(kind)
+                vals.append(v)
+                k = None if kind == _SCALAR else len(v)
+            if k is not None and k != n:
+                if n is not None:
+                    raise ValueError(f"chunk column {name!r} has {k} rows, expected {n}")
+                n = k
+        n = 1 if n is None else n  # an empty chunk adds no row
+        self.counts.append(n)
+        self.n += n
+
+    def flush(self) -> pa.RecordBatch:
+        arrays = [
+            _binary(vals, self.n) if b else _column(kinds, vals, self.counts, t)
+            for kinds, vals, t, b in zip(self.kinds, self.vals, self.schema.types, self.binary)
+        ]
+        self._reset()
+        return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
+
+
+def _column(kinds: list, vals: list, counts: list, typ: pa.DataType) -> pa.Array:
+    """One Arrow column from per-chunk values: runs of scalars build one
+    array (repeated over each chunk's rows by take), runs of numpy
+    columns one concatenate."""
+    segs, i = [], 0
+    for kind, grp in itertools.groupby(kinds):
+        j = i + sum(1 for _ in grp)
+        run = vals[i:j]
+        if kind == _SCALAR:
+            seg = pa.array(run, type=typ)
+            ks = counts[i:j]
+            if ks.count(1) != len(ks):
+                seg = seg.take(np.repeat(np.arange(len(run)), ks))
+            segs.append(seg)
+        elif kind == _NUMPY:
+            segs.append(pa.array(np.concatenate(run), type=typ))
+        elif kind == _LIST:
+            segs.append(pa.array([x for v in run for x in v], type=typ))
+        else:
+            segs.extend(v.cast(typ) for v in run)
+        i = j
+    if not segs:
+        return pa.array([], type=typ)
+    return segs[0] if len(segs) == 1 else pa.concat_arrays(segs)
+
+
+def _binary(parts: list, n: int) -> pa.Array:
+    """One binary column over one (offsets, values) buffer pair."""
+    lengths = np.concatenate([np.zeros(0, np.int64)] + [np.atleast_1d(s) for _, s in parts])
+    if int(lengths.sum()) > MAX_PAYLOAD_BYTES:
+        raise ValueError(
+            "output batch exceeds 2 GiB of payload in one binary column "
+            "(a single input row's payloads must fit one batch)"
+        )
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(lengths, out=offsets[1:])
+    values = np.concatenate([np.zeros(0, np.uint8)] + [d for data, _ in parts for d in data])
+    return pa.Array.from_buffers(
+        pa.binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(values)]
+    )
+
+
+def _rows_of(batch: pa.RecordBatch, views: dict) -> Iterator[dict]:
+    getters = []
+    for field in batch.schema:
+        col = batch.column(field.name)
+        if field.name in views:
+            getters.append(views[field.name](col).__getitem__)
+        elif pa.types.is_binary(field.type):
+            getters.append(lambda ri, col=col: col[ri].as_buffer())
+        else:
+            getters.append(col.to_pylist().__getitem__)
+    names = batch.schema.names
+    for ri in range(batch.num_rows):
+        yield {n: g(ri) for n, g in zip(names, getters)}
+
+
+def rows(
+    row_fn: Callable,
+    schema: pa.Schema,
+    views: dict | None = None,
+    per_partition: bool = False,
+) -> StageFn:
+    """The stage function of a row-wise stage: ``row_fn(row)`` yields
+    output chunks for each input row (a dict, see the module
+    docstring).  With ``per_partition``, `row_fn` is a zero-argument
+    factory called once per partition (for caches that outlive a
+    batch) that returns the row function."""
+    views = views or {}
+
+    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        fn = row_fn() if per_partition else row_fn
+        buf = PayloadBuf(schema)
         for batch in batches:
-            names = [n for n in batch.schema.names if n != src]
-            lists = [batch.column(n).to_pylist() for n in names]
-            payload = batch.column(src) if src in batch.schema.names else None
-            for ri in range(batch.num_rows):
-                row = {n: ls[ri] for n, ls in zip(names, lists)}
-                if payload is not None:
-                    row[src] = payload[ri].as_buffer()
-                for d, arr, fmt in rows_fn(row):
-                    header, body = codec.encode_chunks(arr, fmt)
-                    buf.add(d, header, body)
-                    if buf.nbytes >= flush_bytes:
+            if not batch.num_rows:
+                continue
+            for row in _rows_of(batch, views):
+                for chunk in fn(row):
+                    buf.add(chunk)
+                    if buf.nbytes >= FLUSH_BYTES or buf.n >= FLUSH_ROWS:
                         yield buf.flush()
-                        buf = PayloadBuf(fields, payload_name)
         if buf.n:
             yield buf.flush()
 
-    return images.select(*in_cols).mapInArrow(emit, schema=_ddl(fields))
+    return stage
+
+
+def chunked(
+    batches: Iterable[pa.RecordBatch],
+    table_fn: Callable[[pa.Table], Iterable[pa.RecordBatch]],
+) -> Iterator[pa.RecordBatch]:
+    """Accumulate input batches into tables of at least CHUNK_ROWS rows
+    and yield from ``table_fn(table)`` once per table.  Stages whose
+    rows are tiny (refine candidates) pay per call, not per row, so
+    they run over large chunks regardless of the session's Arrow batch
+    size."""
+    buf: list[pa.RecordBatch] = []
+    n = 0
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        buf.append(batch)
+        n += batch.num_rows
+        if n >= CHUNK_ROWS:
+            yield from table_fn(pa.Table.from_batches(buf))
+            buf, n = [], 0
+    if buf:
+        yield from table_fn(pa.Table.from_batches(buf))

@@ -20,8 +20,6 @@ sums), so tiled == untiled per pixel, which the tests assert.
 from __future__ import annotations
 
 import math
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 import pyspark.sql.functions as F
@@ -29,16 +27,14 @@ from pyspark.sql import DataFrame
 
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import arrowio
-from ukis_pysat_spark.operators.proximity import _GRID_FIELDS
 
 _SQ2 = math.sqrt(2.0)
 _D8 = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1)]
 
-_STATE_SCHEMA = (
-    "tx int, ty int, image_id string, transform array<double>, "
-    "w int, h int, cost binary, valid binary, d binary, improved int"
-)
-_STATE_PA = pa.schema(
+_MIN_SCHEMA = pa.schema([("m", pa.float64())])
+# per-tile relaxation state: cost plane, packed validity bits and the
+# current distance plane ride as three binary columns
+_STATE_SCHEMA = pa.schema(
     [
         ("tx", pa.int32()), ("ty", pa.int32()), ("image_id", pa.string()),
         ("transform", pa.list_(pa.float64())), ("w", pa.int32()),
@@ -46,7 +42,7 @@ _STATE_PA = pa.schema(
         ("d", pa.binary()), ("improved", pa.int32()),
     ]
 )
-_BORDER_PA = pa.schema(
+_BORDER_SCHEMA = pa.schema(
     [
         ("dtx", pa.int32()), ("dty", pa.int32()), ("gr", pa.int64()),
         ("gc", pa.int64()), ("bd", pa.float64()), ("bc", pa.float64()),
@@ -104,185 +100,114 @@ def cost_distance_grid(
 
     planes = tiles.select("image_id", "bytes", "transform", "nodata")
 
-    def min_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            payload = batch.column("bytes")
-            nods = batch.column("nodata").to_pylist()
-            best = np.inf
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer())
-                plane = arr[min(band, arr.shape[0] - 1)].astype(np.float64)
-                v = plane[plane != nods[ri]] if nods[ri] is not None else plane
-                if v.size:
-                    best = min(best, float(v.min()))
-            if np.isfinite(best):
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([best], pa.float64())], names=["m"]
-                )
+    def plane_of(row: dict):
+        arr = codec.decode(row["bytes"])
+        plane = arr[min(band, arr.shape[0] - 1)].astype(np.float64)
+        nod = row["nodata"]
+        valid = np.ones(plane.shape, bool) if nod is None else plane != nod
+        return plane, valid
 
-    row = planes.mapInArrow(min_fn, schema="m double").agg(F.min("m")).collect()
+    def min_fn(row: dict):
+        plane, valid = plane_of(row)
+        if valid.any():
+            yield {"m": float(plane[valid].min())}
+
+    row = arrowio.map_rows(planes, min_fn, _MIN_SCHEMA).agg(F.min("m")).collect()
     zmin = row[0][0]
     if zmin is None:
         raise ValueError("cost_distance_grid: no valid cost cells on the grid")
 
-    def init_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            payload = batch.column("bytes")
-            ids = batch.column("image_id").to_pylist()
-            trans = batch.column("transform").to_pylist()
-            nods = batch.column("nodata").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _STATE_PA.names}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer())
-                plane = arr[min(band, arr.shape[0] - 1)].astype(np.float64)
-                h, w = plane.shape
-                a, _b, c, _dd, e, f_ = trans[ri]
-                valid = (
-                    np.ones(plane.shape, bool) if nods[ri] is None
-                    else plane != nods[ri]
-                )
-                d0 = np.where(valid & (plane == zmin), 0.0, np.inf)
-                d0 = _relax_to_fixpoint(
-                    plane, valid, d0, np.zeros(plane.shape, bool)
-                )
-                cols["tx"].append(int(round((c - gc0) / (ga * tile))))
-                cols["ty"].append(int(round((f_ - gf0) / (ge * tile))))
-                cols["image_id"].append(ids[ri])
-                cols["transform"].append([a, 0.0, c, 0.0, e, f_])
-                cols["w"].append(w)
-                cols["h"].append(h)
-                cols["cost"].append(plane.tobytes())
-                cols["valid"].append(np.packbits(valid).tobytes())
-                cols["d"].append(d0.tobytes())
-                cols["improved"].append(1)
-            if cols["tx"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], f.type) for f in _STATE_PA],
-                    schema=_STATE_PA,
-                )
+    def state_row(row: dict, cost, valid, d, improved: int) -> dict:
+        a, _b, c, _dd, e, f_ = row["transform"]
+        return {
+            "tx": int(round((c - gc0) / (ga * tile))),
+            "ty": int(round((f_ - gf0) / (ge * tile))),
+            "image_id": row["image_id"],
+            "transform": [a, 0.0, c, 0.0, e, f_],
+            "w": cost.shape[1],
+            "h": cost.shape[0],
+            "cost": cost,
+            "valid": np.packbits(valid),
+            "d": d,
+            "improved": improved,
+        }
 
-    state = planes.mapInArrow(init_fn, schema=_STATE_SCHEMA).localCheckpoint()
+    def init_fn(row: dict):
+        plane, valid = plane_of(row)
+        d0 = np.where(valid & (plane == zmin), 0.0, np.inf)
+        d0 = _relax_to_fixpoint(plane, valid, d0, np.zeros(plane.shape, bool))
+        yield state_row(row, plane, valid, d0, 1)
 
-    def border_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            imp = batch.column("improved").to_pylist()
-            txs = batch.column("tx").to_pylist()
-            tys = batch.column("ty").to_pylist()
-            ws = batch.column("w").to_pylist()
-            hs = batch.column("h").to_pylist()
-            dcol = batch.column("d")
-            ccol = batch.column("cost")
-            cols: dict[str, list] = {n: [] for n in _BORDER_PA.names}
-            for ri in range(batch.num_rows):
-                if not imp[ri]:
+    state = arrowio.map_rows(planes, init_fn, _STATE_SCHEMA).localCheckpoint()
+
+    def plane(row: dict, name: str) -> np.ndarray:
+        return np.frombuffer(row[name], np.float64).reshape(row["h"], row["w"])
+
+    def valid_of(row: dict) -> np.ndarray:
+        h, w = row["h"], row["w"]
+        bits = np.unpackbits(np.frombuffer(row["valid"], np.uint8), count=h * w)
+        return bits.astype(bool).reshape(h, w)
+
+    def border_fn(row: dict):
+        if not row["improved"]:
+            return
+        cst, d = plane(row, "cost"), plane(row, "d")
+        h, w = d.shape
+        edge = np.zeros((h, w), bool)
+        edge[0, :] = edge[-1, :] = edge[:, 0] = edge[:, -1] = True
+        edge &= np.isfinite(d)
+        er, ec = np.nonzero(edge)
+        tx, ty = row["tx"], row["ty"]
+        gr = er.astype(np.int64) + ty * tile
+        gc = ec.astype(np.int64) + tx * tile
+        bd = d[er, ec]
+        bc = cst[er, ec]
+        for dty in (-1, 0, 1):
+            for dtx in (-1, 0, 1):
+                if dtx == 0 and dty == 0:
                     continue
-                h, w = hs[ri], ws[ri]
-                d = np.frombuffer(dcol[ri].as_buffer(), np.float64).reshape(h, w)
-                cst = np.frombuffer(ccol[ri].as_buffer(), np.float64).reshape(h, w)
-                edge = np.zeros((h, w), bool)
-                edge[0, :] = edge[-1, :] = edge[:, 0] = edge[:, -1] = True
-                edge &= np.isfinite(d)
-                er, ec = np.nonzero(edge)
-                if er.size == 0:
-                    continue
-                tx, ty = txs[ri], tys[ri]
-                gr = er.astype(np.int64) + ty * tile
-                gc = ec.astype(np.int64) + tx * tile
-                bd = d[er, ec]
-                bc = cst[er, ec]
-                for dty in (-1, 0, 1):
-                    for dtx in (-1, 0, 1):
-                        if dtx == 0 and dty == 0:
-                            continue
-                        r0 = (ty + dty) * tile - 1
-                        r1 = (ty + dty) * tile + tile + 1
-                        c0 = (tx + dtx) * tile - 1
-                        c1 = (tx + dtx) * tile + tile + 1
-                        m = (gr >= r0) & (gr < r1) & (gc >= c0) & (gc < c1)
-                        n = int(m.sum())
-                        if not n:
-                            continue
-                        cols["dtx"].extend([tx + dtx] * n)
-                        cols["dty"].extend([ty + dty] * n)
-                        cols["gr"].extend(gr[m].tolist())
-                        cols["gc"].extend(gc[m].tolist())
-                        cols["bd"].extend(bd[m].tolist())
-                        cols["bc"].extend(bc[m].tolist())
-            if cols["dtx"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], f.type) for f in _BORDER_PA],
-                    schema=_BORDER_PA,
-                )
+                r0 = (ty + dty) * tile - 1
+                r1 = (ty + dty) * tile + tile + 1
+                c0 = (tx + dtx) * tile - 1
+                c1 = (tx + dtx) * tile + tile + 1
+                m = (gr >= r0) & (gr < r1) & (gc >= c0) & (gc < c1)
+                yield {"dtx": tx + dtx, "dty": ty + dty, "gr": gr[m],
+                       "gc": gc[m], "bd": bd[m], "bc": bc[m]}
 
-    def relax_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            txs = batch.column("tx").to_pylist()
-            tys = batch.column("ty").to_pylist()
-            ids = batch.column("image_id").to_pylist()
-            trans = batch.column("transform").to_pylist()
-            ws = batch.column("w").to_pylist()
-            hs = batch.column("h").to_pylist()
-            ccol = batch.column("cost")
-            vcol = batch.column("valid")
-            dcol = batch.column("d")
-            hr = batch.column("halo_r").to_pylist()
-            hc = batch.column("halo_c").to_pylist()
-            hd = batch.column("halo_d").to_pylist()
-            hcst = batch.column("halo_cst").to_pylist()
-            cols: dict[str, list] = {n: [] for n in _STATE_PA.names}
-            for ri in range(batch.num_rows):
-                h, w = hs[ri], ws[ri]
-                tx, ty = txs[ri], tys[ri]
-                cst = np.frombuffer(ccol[ri].as_buffer(), np.float64).reshape(h, w)
-                valid = np.unpackbits(
-                    np.frombuffer(vcol[ri].as_buffer(), np.uint8),
-                    count=h * w,
-                ).astype(bool).reshape(h, w)
-                d = np.frombuffer(dcol[ri].as_buffer(), np.float64).reshape(h, w)
-                improved = 0
-                if hr[ri] is not None and len(hr[ri]):
-                    # extend by the 1-pixel halo ring: received border
-                    # cells are frozen boundary conditions
-                    ce = np.zeros((h + 2, w + 2))
-                    ve = np.zeros((h + 2, w + 2), bool)
-                    de = np.full((h + 2, w + 2), np.inf)
-                    fe = np.zeros((h + 2, w + 2), bool)
-                    ce[1 : 1 + h, 1 : 1 + w] = cst
-                    ve[1 : 1 + h, 1 : 1 + w] = valid
-                    de[1 : 1 + h, 1 : 1 + w] = d
-                    rr = np.asarray(hr[ri], np.int64) - ty * tile + 1
-                    cc = np.asarray(hc[ri], np.int64) - tx * tile + 1
-                    keep = (rr >= 0) & (rr < h + 2) & (cc >= 0) & (cc < w + 2)
-                    rr, cc = rr[keep], cc[keep]
-                    dv = np.asarray(hd[ri], np.float64)[keep]
-                    cv = np.asarray(hcst[ri], np.float64)[keep]
-                    # duplicates (same cell from multiple rounds) keep
-                    # the minimum d — monotone, order-independent
-                    order = np.argsort(dv)[::-1]
-                    de[rr[order], cc[order]] = dv[order]
-                    ce[rr[order], cc[order]] = cv[order]
-                    ve[rr, cc] = True
-                    fe[rr, cc] = True
-                    de2 = _relax_to_fixpoint(ce, ve, de, fe)
-                    nd = de2[1 : 1 + h, 1 : 1 + w]
-                    if not np.array_equal(nd, d):
-                        improved = 1
-                        d = nd
-                cols["tx"].append(tx)
-                cols["ty"].append(ty)
-                cols["image_id"].append(ids[ri])
-                cols["transform"].append(list(trans[ri]))
-                cols["w"].append(w)
-                cols["h"].append(h)
-                cols["cost"].append(cst.tobytes())
-                cols["valid"].append(np.packbits(valid).tobytes())
-                cols["d"].append(np.ascontiguousarray(d).tobytes())
-                cols["improved"].append(improved)
-            if cols["tx"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], f.type) for f in _STATE_PA],
-                    schema=_STATE_PA,
-                )
+    def relax_fn(row: dict):
+        cst, valid, d = plane(row, "cost"), valid_of(row), plane(row, "d")
+        h, w = d.shape
+        tx, ty = row["tx"], row["ty"]
+        improved = 0
+        if row["halo_r"]:
+            # extend by the 1-pixel halo ring: received border
+            # cells are frozen boundary conditions
+            ce = np.zeros((h + 2, w + 2))
+            ve = np.zeros((h + 2, w + 2), bool)
+            de = np.full((h + 2, w + 2), np.inf)
+            fe = np.zeros((h + 2, w + 2), bool)
+            ce[1 : 1 + h, 1 : 1 + w] = cst
+            ve[1 : 1 + h, 1 : 1 + w] = valid
+            de[1 : 1 + h, 1 : 1 + w] = d
+            rr = np.asarray(row["halo_r"], np.int64) - ty * tile + 1
+            cc = np.asarray(row["halo_c"], np.int64) - tx * tile + 1
+            keep = (rr >= 0) & (rr < h + 2) & (cc >= 0) & (cc < w + 2)
+            rr, cc = rr[keep], cc[keep]
+            dv = np.asarray(row["halo_d"], np.float64)[keep]
+            cv = np.asarray(row["halo_cst"], np.float64)[keep]
+            # duplicates (same cell from multiple rounds) keep
+            # the minimum d — monotone, order-independent
+            order = np.argsort(dv)[::-1]
+            de[rr[order], cc[order]] = dv[order]
+            ce[rr[order], cc[order]] = cv[order]
+            ve[rr, cc] = True
+            fe[rr, cc] = True
+            de2 = _relax_to_fixpoint(ce, ve, de, fe)
+            nd = de2[1 : 1 + h, 1 : 1 + w]
+            if not np.array_equal(nd, d):
+                improved = 1
+                d = nd
+        yield state_row(row, cst, valid, d, improved)
 
     # max_halo_rounds + 1 convergence checks for max_halo_rounds relax
     # steps: a grid that reaches the fixpoint exactly on the last
@@ -293,10 +218,7 @@ def cost_distance_grid(
                 stats["halo_rounds"] = rounds
             break
         halos = (
-            state.mapInArrow(
-                border_fn,
-                schema="dtx int, dty int, gr long, gc long, bd double, bc double",
-            )
+            arrowio.map_rows(state, border_fn, _BORDER_SCHEMA)
             .groupBy("dtx", "dty")
             .agg(
                 F.collect_list("gr").alias("halo_r"),
@@ -305,16 +227,10 @@ def cost_distance_grid(
                 F.collect_list("bc").alias("halo_cst"),
             )
         )
-        state = (
-            state.join(
-                halos,
-                (state.tx == halos.dtx) & (state.ty == halos.dty),
-                "left",
-            )
-            .drop("dtx", "dty")
-            .mapInArrow(relax_fn, schema=_STATE_SCHEMA)
-            .localCheckpoint()
-        )
+        joined = state.join(
+            halos, (state.tx == halos.dtx) & (state.ty == halos.dty), "left"
+        ).drop("dtx", "dty")
+        state = arrowio.map_rows(joined, relax_fn, _STATE_SCHEMA).localCheckpoint()
     else:
         raise RuntimeError(
             f"cost_distance_grid did not reach the cross-tile fixpoint in "
@@ -322,27 +238,18 @@ def cost_distance_grid(
         )
 
     def out_fn(row: dict):
-        h, w = row["h"], row["w"]
-        d = np.frombuffer(row["d"], np.float64).reshape(h, w)
-        valid = np.unpackbits(
-            np.frombuffer(row["valid"], np.uint8), count=h * w
-        ).astype(bool).reshape(h, w)
-        out = np.where(valid & np.isfinite(d), d, out_nodata)[None, :, :]
+        d = plane(row, "d")
+        out = np.where(valid_of(row) & np.isfinite(d), d, out_nodata)[None, :, :]
         a, _b, c, _dd, e, f_ = row["transform"]
-        yield (
-            {
-                "image_id": row["image_id"], "w": w, "h": h, "fmt": "raw",
-                "bands": 1, "dtype": "float64", "crs": "grid",
-                "transform": [a, 0.0, c, 0.0, e, f_], "nodata": out_nodata,
-            },
-            out,
-            "raw",
-        )
+        yield {
+            "image_id": row["image_id"], "bytes": codec.encode_chunks(out, "raw"),
+            "w": row["w"], "h": row["h"], "fmt": "raw", "bands": 1,
+            "dtype": "float64", "crs": "grid",
+            "transform": [a, 0.0, c, 0.0, e, f_], "nodata": out_nodata,
+        }
 
-    return arrowio.flat_map_payload_rows(
-        state,
-        ["image_id", "transform", "w", "h", "valid", "d"],
+    return arrowio.map_rows(
+        state.select("image_id", "transform", "w", "h", "valid", "d"),
         out_fn,
-        _GRID_FIELDS,
-        in_payload="d",
+        arrowio.RASTER_SCHEMA,
     )

@@ -24,26 +24,11 @@ scene pair, no other shuffle at any scale.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import arrowio
-
-HISTMATCH_FIELDS = [
-    ("image_id", pa.string()),
-    ("bytes", pa.binary()),
-    ("w", pa.int32()),
-    ("h", pa.int32()),
-    ("fmt", pa.string()),
-    ("bands", pa.int32()),
-    ("dtype", pa.string()),
-    ("crs", pa.string()),
-    ("transform", pa.list_(pa.float64())),
-    ("nodata", pa.float64()),
-]
-
 
 def _match_plane(src: np.ndarray, rv: np.ndarray, nod):
     """One band: remap src values onto the distribution of ``rv`` (the
@@ -106,27 +91,22 @@ def match_histogram(
                 for b in range(src.shape[0])
             ]
         )
-        yield (
-            {
-                "image_id": row["image_id"],
-                "w": src.shape[2],
-                "h": src.shape[1],
-                "fmt": "raw",
-                "bands": src.shape[0],
-                "dtype": "float64",
-                "crs": row["crs"],
-                "transform": list(row["transform"]),
-                "nodata": nod,
-            },
-            out,
-            "raw",
-        )
+        yield {
+            "image_id": row["image_id"],
+            "w": src.shape[2],
+            "h": src.shape[1],
+            "fmt": "raw",
+            "bands": src.shape[0],
+            "dtype": "float64",
+            "crs": row["crs"],
+            "transform": list(row["transform"]),
+            "nodata": nod,
+            "bytes": codec.encode_chunks(out, "raw"),
+        }
 
-    return arrowio.flat_map_payload_rows(
-        j,
-        ["image_id", "bytes", "transform", "crs", "nodata",
-         "bytes_ref", "nodata_ref"],
+    return arrowio.map_rows(
+        j.select("image_id", "bytes", "transform", "crs", "nodata",
+                 "bytes_ref", "nodata_ref"),
         rows_fn,
-        HISTMATCH_FIELDS,
-        in_payload="bytes",
+        arrowio.RASTER_SCHEMA,
     )

@@ -12,12 +12,11 @@ is one distributed plan over the whole images table:
    ``explode(sequence(...))`` twice — the same pure-relational cover
    trick as spatial_join's cell cover, so Catalyst prunes and AQE
    sizes the fan-out.
-2. **Contribution stage** (one mapInArrow): each image is decoded
+2. **Contribution stage** (one row-wise Arrow stage): each image is decoded
    ONCE, and for each covered tile the selected band is resampled to
    the tile's pixel centers by inverse-affine nearest-neighbor
    (center-in-source-cell semantics, consistent with the engine's
-   closed-boundary membership); nodata becomes NaN.  Contributions
-   leave through the zero-copy PayloadBuf emitter.
+   closed-boundary membership); nodata becomes NaN.
 3. **Stack stage** (groupBy tile + applyInArrow): each tile's cropped
    contributions become (flat pixel index, value) COO pairs and are
    reduced per pixel with one lexsort + grouped slicing (exact
@@ -49,22 +48,18 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
-from ukis_pysat_spark.operators.arrowio import PayloadBuf
+from ukis_pysat_spark.operators import arrowio
 
 _METHODS = ("median", "mean", "min", "max", "count")
 
-_CONTRIB_FIELDS = [
-    ("tx", pa.int32()),
-    ("ty", pa.int32()),
-    ("x0", pa.int32()),  # tile-relative column of the cropped window
-    ("y0", pa.int32()),  # tile-relative row of the cropped window
-    ("bytes", pa.binary()),
-]
-
-COMPOSITE_SCHEMA = (
-    "tx int, ty int, bytes binary, w int, h int, fmt string, bands int, "
-    "dtype string, crs string, transform array<double>, nodata double, "
-    "n_scenes int"
+_CONTRIB_SCHEMA = pa.schema(
+    [
+        ("tx", pa.int32()),
+        ("ty", pa.int32()),
+        ("x0", pa.int32()),  # tile-relative column of the cropped window
+        ("y0", pa.int32()),  # tile-relative row of the cropped window
+        ("bytes", pa.binary()),
+    ]
 )
 
 
@@ -96,70 +91,59 @@ def _tile_cover(images: DataFrame, grid_transform, grid_w, grid_h, tile):
     )
 
 
-def _contrib_batches(grid_transform, grid_w, grid_h, tile, band):
+def _contrib_rows(grid_transform, grid_w, grid_h, tile, band):
     ga, gc, ge, gf = grid_transform[0], grid_transform[2], grid_transform[4], grid_transform[5]
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf = PayloadBuf(_CONTRIB_FIELDS)
-        for batch in batches:
-            payload = batch.column("bytes")
-            transforms_col = batch.column("transform").to_pylist()
-            nodatas = batch.column("nodata").to_pylist()
-            txs = batch.column("tx").to_pylist()
-            tys = batch.column("ty").to_pylist()
-            # rows for one image arrive adjacent (the explode preserves
-            # input order inside a partition): decode once per image
-            ids = batch.column("image_id").to_pylist()
-            decoded: dict[str, np.ndarray] = {}
-            for ri in range(batch.num_rows):
-                iid = ids[ri]
-                arr = decoded.get(iid)
-                if arr is None:
-                    decoded.clear()  # hold ONE image at a time
-                    arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-                    decoded[iid] = arr
-                nb, sh, sw = arr.shape
-                plane = arr[min(band, nb - 1)]
-                a, _b, c, _d, e, f_ = transforms_col[ri]
-                nod = nodatas[ri]
-                tx, ty = txs[ri], tys[ri]
-                c0, r0 = tx * tile, ty * tile
-                tw = min(tile, grid_w - c0)
-                th = min(tile, grid_h - r0)
-                # target pixel centers -> source cells (inverse affine,
-                # center-in-cell: floor((coord - origin) / step))
-                xs = gc + (np.arange(c0, c0 + tw, dtype=np.float64) + 0.5) * ga
-                ys = gf + (np.arange(r0, r0 + th, dtype=np.float64) + 0.5) * ge
-                sc = np.floor((xs - c) / a).astype(np.int64)
-                sr = np.floor((ys - f_) / e).astype(np.int64)
-                # xs/ys are monotone, so the in-source runs are
-                # contiguous: crop the contribution to its covered
-                # sub-window (a small scene on a big tile ships only
-                # its own pixels, keeping the shuffle O(source px))
-                okc = np.flatnonzero((sc >= 0) & (sc < sw))
-                okr = np.flatnonzero((sr >= 0) & (sr < sh))
-                if okc.size == 0 or okr.size == 0:
-                    continue
-                x0, y0 = int(okc[0]), int(okr[0])
-                sub = plane[sr[okr][:, None], sc[okc][None, :]]
-                if nod is not None:
-                    sub = np.where(sub == nod, np.nan, sub)
-                if np.isnan(sub).all():
-                    continue
-                header, body = codec.encode_chunks(
-                    np.ascontiguousarray(sub[None, :, :]), "raw"
-                )
-                buf.add({"tx": tx, "ty": ty, "x0": x0, "y0": y0}, header, body)
-                if buf.nbytes >= (64 << 20):
-                    yield buf.flush()
-                    buf = PayloadBuf(_CONTRIB_FIELDS)
-        if buf.n:
-            yield buf.flush()
+    def factory():
+        # rows for one image arrive adjacent (the explode preserves
+        # input order inside a partition): decode once per image,
+        # holding ONE image at a time
+        decoded: dict[str, np.ndarray] = {}
 
-    return run
+        def row_fn(row: dict):
+            arr = decoded.get(row["image_id"])
+            if arr is None:
+                decoded.clear()
+                arr = codec.decode(row["bytes"]).astype(np.float64)
+                decoded[row["image_id"]] = arr
+            nb, sh, sw = arr.shape
+            plane = arr[min(band, nb - 1)]
+            a, _b, c, _d, e, f_ = row["transform"]
+            nod = row["nodata"]
+            tx, ty = row["tx"], row["ty"]
+            c0, r0 = tx * tile, ty * tile
+            tw = min(tile, grid_w - c0)
+            th = min(tile, grid_h - r0)
+            # target pixel centers -> source cells (inverse affine,
+            # center-in-cell: floor((coord - origin) / step))
+            xs = gc + (np.arange(c0, c0 + tw, dtype=np.float64) + 0.5) * ga
+            ys = gf + (np.arange(r0, r0 + th, dtype=np.float64) + 0.5) * ge
+            sc = np.floor((xs - c) / a).astype(np.int64)
+            sr = np.floor((ys - f_) / e).astype(np.int64)
+            # xs/ys are monotone, so the in-source runs are
+            # contiguous: crop the contribution to its covered
+            # sub-window (a small scene on a big tile ships only
+            # its own pixels, keeping the shuffle O(source px))
+            okc = np.flatnonzero((sc >= 0) & (sc < sw))
+            okr = np.flatnonzero((sr >= 0) & (sr < sh))
+            if okc.size == 0 or okr.size == 0:
+                return
+            sub = plane[sr[okr][:, None], sc[okc][None, :]]
+            if nod is not None:
+                sub = np.where(sub == nod, np.nan, sub)
+            if np.isnan(sub).all():
+                return
+            yield {
+                "tx": tx, "ty": ty, "x0": int(okc[0]), "y0": int(okr[0]),
+                "bytes": codec.encode_chunks(sub[None, :, :], "raw"),
+            }
+
+        return row_fn
+
+    return factory
 
 
-_OUT_PA = pa.schema(
+COMPOSITE_SCHEMA = pa.schema(
     [
         ("tx", pa.int32()),
         ("ty", pa.int32()),
@@ -245,7 +229,7 @@ def _stack_fn(grid_transform, grid_w, grid_h, tile, method, crs, nodata_out, out
                 "nodata": [float(nodata_out)],
                 "n_scenes": [n_scenes],
             },
-            schema=_OUT_PA,
+            schema=COMPOSITE_SCHEMA,
         )
 
     return stack
@@ -281,13 +265,15 @@ def composite(
         images.select("image_id", "bytes", "w", "h", "transform", "nodata"),
         grid_transform, grid_w, grid_h, tile,
     )
-    contribs = covered.mapInArrow(
-        _contrib_batches(grid_transform, grid_w, grid_h, tile, band),
-        schema="tx int, ty int, x0 int, y0 int, bytes binary",
+    contribs = arrowio.map_rows(
+        covered,
+        _contrib_rows(grid_transform, grid_w, grid_h, tile, band),
+        _CONTRIB_SCHEMA,
+        per_partition=True,
     )
     return contribs.groupBy("tx", "ty").applyInArrow(
         _stack_fn(
             grid_transform, grid_w, grid_h, tile, method, crs, nodata_out, out_dtype
         ),
-        schema=COMPOSITE_SCHEMA,
+        schema=arrowio.ddl(COMPOSITE_SCHEMA),
     )

@@ -6,13 +6,12 @@ are not in this environment) — but the Spark-side plumbing (schema,
 Arrow batch shape, partitioning) is real and tested, so dropping in a
 real decoder is a one-function change.
 
-All three payload-touching operators run as a SINGLE ``mapInArrow``
-stage (round 4): decode_stats assembles columnar output lists directly
-into RecordBatches (no pandas, no per-row dicts), and the two
-payload-EMITTING operators (resize_images, frame_sample) go through the
-Arrow-native PayloadBuf of operators/arrowio.py — one contiguous values
-buffer + offsets per flush, zero per-row Python bytes objects, the same
-discipline as the tiling/dn2toa emitters.
+Every payload-touching operator is ONE row-wise Arrow stage
+(operators/arrowio.py): payloads enter as zero-copy buffer views, and
+the payload-EMITTING operators (resize_images, frame_sample,
+decode_audio) leave through one contiguous values buffer + offsets per
+flush — zero per-row Python bytes objects, the same discipline as the
+tiling/dn2toa emitters.
 
 - decode_stats      per-image band statistics (mean/std/min/max) —
                     a feature-extraction pass that never ships pixels.
@@ -27,8 +26,6 @@ discipline as the tiling/dn2toa emitters.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -37,12 +34,7 @@ import pyspark.sql.functions as F
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import arrowio
 
-STATS_SCHEMA = (
-    "image_id string, band int, mean double, std double, "
-    "min double, max double, n_valid long"
-)
-
-_STATS_PA_SCHEMA = pa.schema(
+STATS_SCHEMA = pa.schema(
     [
         ("image_id", pa.string()),
         ("band", pa.int32()),
@@ -56,56 +48,41 @@ _STATS_PA_SCHEMA = pa.schema(
 
 
 def decode_stats(images: DataFrame, nodata: float | None = 0.0) -> DataFrame:
-    """Per-band pixel statistics over valid (!= nodata) pixels.
+    """Per-band pixel statistics over valid (!= nodata) pixels; bands
+    with no valid pixel report zeros."""
 
-    One mapInArrow stage; the payload column enters as zero-copy Arrow
-    buffer views and the (tiny) output rows are assembled as columnar
-    lists -> one RecordBatch per input batch — no pandas anywhere."""
+    def row_fn(row: dict):
+        arr = codec.decode(row["bytes"]).astype(np.float64)
+        # all bands in one vectorized pass (S2 scenes have 13):
+        # masked moments via sums, extremes via +-inf sentinels
+        if nodata is None:
+            valid = np.ones(arr.shape, dtype=bool)
+        else:
+            valid = arr != nodata
+        n = valid.sum(axis=(1, 2))
+        safe_n = np.maximum(n, 1)
+        masked = np.where(valid, arr, 0.0)
+        s1 = masked.sum(axis=(1, 2))
+        mean = s1 / safe_n
+        # two-pass variance: E[x^2]-E[x]^2 cancels catastrophically
+        # for high-mean/low-variance bands (6.8% rel. error observed
+        # at mean 1e7, sigma 0.5); sum of squared deviations doesn't
+        dev = np.where(valid, arr - mean[:, None, None], 0.0)
+        var = (dev * dev).sum(axis=(1, 2)) / safe_n
+        mn = np.where(valid, arr, np.inf).min(axis=(1, 2))
+        mx = np.where(valid, arr, -np.inf).max(axis=(1, 2))
+        empty = n == 0
+        yield {
+            "image_id": row["image_id"],
+            "band": np.arange(arr.shape[0]),
+            "mean": np.where(empty, 0.0, mean),
+            "std": np.where(empty, 0.0, np.sqrt(var)),
+            "min": np.where(empty, 0.0, mn),
+            "max": np.where(empty, 0.0, mx),
+            "n_valid": n,
+        }
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            payload = batch.column("bytes")
-            cols: dict[str, list] = {n: [] for n in _STATS_PA_SCHEMA.names}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-                nb = arr.shape[0]
-                # all bands in one vectorized pass (S2 scenes have 13):
-                # masked moments via sums, extremes via +-inf sentinels
-                if nodata is None:
-                    valid = np.ones(arr.shape, dtype=bool)
-                else:
-                    valid = arr != nodata
-                n = valid.sum(axis=(1, 2))
-                safe_n = np.maximum(n, 1)
-                masked = np.where(valid, arr, 0.0)
-                s1 = masked.sum(axis=(1, 2))
-                mean = s1 / safe_n
-                # two-pass variance: E[x^2]-E[x]^2 cancels catastrophically
-                # for high-mean/low-variance bands (6.8% rel. error observed
-                # at mean 1e7, sigma 0.5); sum of squared deviations doesn't
-                dev = np.where(valid, arr - mean[:, None, None], 0.0)
-                var = (dev * dev).sum(axis=(1, 2)) / safe_n
-                mn = np.where(valid, arr, np.inf).min(axis=(1, 2))
-                mx = np.where(valid, arr, -np.inf).max(axis=(1, 2))
-                empty = n == 0
-                cols["image_id"].extend([ids[ri]] * nb)
-                cols["band"].extend(range(nb))
-                cols["mean"].extend(np.where(empty, 0.0, mean).tolist())
-                cols["std"].extend(np.where(empty, 0.0, np.sqrt(var)).tolist())
-                cols["min"].extend(np.where(empty, 0.0, mn).tolist())
-                cols["max"].extend(np.where(empty, 0.0, mx).tolist())
-                cols["n_valid"].extend(n.tolist())
-            if cols["image_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols[f.name], type=f.type)
-                        for f in _STATS_PA_SCHEMA
-                    ],
-                    schema=_STATS_PA_SCHEMA,
-                )
-
-    return images.select("image_id", "bytes").mapInArrow(run, schema=STATS_SCHEMA)
+    return arrowio.map_rows(images.select("image_id", "bytes"), row_fn, STATS_SCHEMA)
 
 
 def phash64_arr(arr: np.ndarray) -> int:
@@ -154,34 +131,36 @@ def phash64_arr(arr: np.ndarray) -> int:
     return int(packed.astype(np.int64))
 
 
-_PHASH_PA_SCHEMA = pa.schema([("image_id", pa.string()), ("phash", pa.int64())])
+PHASH_SCHEMA = pa.schema([("image_id", pa.string()), ("phash", pa.int64())])
 
 
 def compute_phash(images: DataFrame) -> DataFrame:
     """Compute the 64-bit perceptual hash from pixel payloads:
-    (image_id, phash) in one ``mapInArrow`` stage (payloads enter as
-    zero-copy Arrow buffer views; output is two flat columns).
+    (image_id, phash) in one row-wise Arrow stage.
 
     Feeds ``dedup.phash_neardup`` / ``dedup.hamming_pairs`` when the
     catalog has no precomputed phash column; when it does, prefer the
     precomputed column — near-dup then never touches pixels."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            payload = batch.column("bytes")
-            out = np.empty(batch.num_rows, dtype=np.int64)
-            for ri in range(batch.num_rows):
-                out[ri] = phash64_arr(codec.decode(payload[ri].as_buffer()))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("image_id"), pa.array(out, type=pa.int64())],
-                schema=_PHASH_PA_SCHEMA,
-            )
+    def row_fn(row: dict):
+        yield {"image_id": row["image_id"], "phash": phash64_arr(codec.decode(row["bytes"]))}
 
-    return images.select("image_id", "bytes").mapInArrow(
-        run, schema="image_id string, phash long"
-    )
+    return arrowio.map_rows(images.select("image_id", "bytes"), row_fn, PHASH_SCHEMA)
+
+
+_RESIZE_SCHEMA = pa.schema(
+    [
+        ("image_id", pa.string()),
+        ("bytes", pa.binary()),
+        ("w", pa.int32()),
+        ("h", pa.int32()),
+        ("caption", pa.string()),
+    ]
+)
+
+_FRAME_SCHEMA = pa.schema(
+    [("image_id", pa.string()), ("frame", pa.int32()), ("bytes", pa.binary())]
+)
 
 
 def resize_images(
@@ -191,8 +170,7 @@ def resize_images(
     out_fmt: str = "raw",
     method: str = "nearest",
 ) -> DataFrame:
-    """Resize; emits (image_id, bytes, w, h, caption) through the
-    Arrow-native payload buffer (1 -> 1 rows_fn).
+    """Resize; emits (image_id, bytes, w, h, caption).
 
     method='nearest' index-samples; method='area' block-averages
     (integer-bucket mean via two reduceat passes — the right filter
@@ -220,48 +198,31 @@ def resize_images(
             ri = (np.arange(out_h) * arr.shape[1] // out_h).astype(np.int64)
             ci = (np.arange(out_w) * arr.shape[2] // out_w).astype(np.int64)
             small = np.ascontiguousarray(arr[:, ri[:, None], ci[None, :]])
-        meta = {
+        yield {
             "image_id": row["image_id"],
+            "bytes": codec.encode_chunks(small, out_fmt),
             "w": out_w,
             "h": out_h,
             "caption": row["caption"],
         }
-        yield meta, small, out_fmt
 
-    return arrowio.flat_map_payload_rows(
-        images,
-        ["image_id", "bytes", "caption"],
-        rows_fn,
-        fields=[
-            ("image_id", pa.string()),
-            ("bytes", pa.binary()),
-            ("w", pa.int32()),
-            ("h", pa.int32()),
-            ("caption", pa.string()),
-        ],
+    return arrowio.map_rows(
+        images.select("image_id", "bytes", "caption"), rows_fn, _RESIZE_SCHEMA
     )
 
 
 def frame_sample(videos: DataFrame, every_n: int = 2) -> DataFrame:
     """Sample every nth frame of a (frames, rows, cols) payload; the
     deterministic fake video decode is the codec itself (band axis =
-    time axis).  1 -> N emission through the Arrow-native buffer."""
+    time axis).  1 -> N rows per video."""
 
     def rows_fn(row: dict):
         arr = codec.decode(row["bytes"])
         for fi in range(0, arr.shape[0], every_n):
-            yield {"image_id": row["image_id"], "frame": fi}, arr[fi], "raw"
+            yield {"image_id": row["image_id"], "frame": fi,
+                   "bytes": codec.encode_chunks(arr[fi], "raw")}
 
-    return arrowio.flat_map_payload_rows(
-        videos,
-        ["image_id", "bytes"],
-        rows_fn,
-        fields=[
-            ("image_id", pa.string()),
-            ("frame", pa.int32()),
-            ("bytes", pa.binary()),
-        ],
-    )
+    return arrowio.map_rows(videos.select("image_id", "bytes"), rows_fn, _FRAME_SCHEMA)
 
 
 def frame_neardup(
@@ -269,7 +230,7 @@ def frame_neardup(
 ) -> DataFrame:
     """Frame-level near-duplicate pairs across video payloads: sample
     every nth frame (frame_sample), hash each frame to its 64-bit
-    perceptual hash (compute_phash — both single mapInArrow stages),
+    perceptual hash (compute_phash — both single Arrow stages),
     then the relational pigeonhole hamming join (dedup.hamming_pairs).
     Frame ids are 'video_id#frame'; pairs spanning different videos
     reveal shared/near-identical footage, pairs within one video
@@ -443,43 +404,39 @@ def parse_wav(buf) -> tuple[np.ndarray, int]:
     return arr, int(rate)
 
 
+_AUDIO_SCHEMA = pa.schema(
+    [
+        ("image_id", pa.string()),
+        ("bytes", pa.binary()),
+        ("channels", pa.int32()),
+        ("sample_rate", pa.int32()),
+        ("n_samples", pa.int64()),
+    ]
+)
+
+
 def decode_audio(audio: DataFrame) -> DataFrame:
     """Decode WAV payloads to (channels, samples) sample arrays.
 
     PCM and IEEE-float WAV decode for REAL (parse_wav above); any
     compressed format raises loudly inside the task.  Output rows carry
     the decoded samples re-encoded through the in-house codec as a
-    (channels, 1, samples) payload plus typed metadata — emitted
-    through the same Arrow-native PayloadBuf as every other payload
-    stage (one contiguous values buffer, zero per-row bytes objects)."""
+    (channels, 1, samples) payload plus typed metadata."""
 
     def rows_fn(row: dict):
         arr, rate = parse_wav(row["bytes"])
-        meta = {
+        yield {
             "image_id": row["image_id"],
+            "bytes": codec.encode_chunks(arr[:, None, :], "raw"),
             "channels": int(arr.shape[0]),
             "sample_rate": rate,
             "n_samples": int(arr.shape[1]),
         }
-        yield meta, arr[:, None, :], "raw"
 
-    return arrowio.flat_map_payload_rows(
-        audio,
-        ["image_id", "bytes"],
-        rows_fn,
-        fields=[
-            ("image_id", pa.string()),
-            ("bytes", pa.binary()),
-            ("channels", pa.int32()),
-            ("sample_rate", pa.int32()),
-            ("n_samples", pa.int64()),
-        ],
-    )
+    return arrowio.map_rows(audio.select("image_id", "bytes"), rows_fn, _AUDIO_SCHEMA)
 
 
-HIST_SCHEMA = "image_id string, band int, bin int, count long"
-
-_HIST_PA_SCHEMA = pa.schema(
+HIST_SCHEMA = pa.schema(
     [
         ("image_id", pa.string()),
         ("band", pa.int32()),
@@ -499,43 +456,26 @@ def band_histogram(
     """Fixed-width per-band pixel histograms: one row per non-empty
     bin, ``bin = floor((v - lo) / width)`` for valid pixels with
     lo <= v < hi (out-of-range and nodata pixels are dropped — GDAL's
-    ``-hist`` default minus the clamp).  One mapInArrow stage; all
+    ``-hist`` default minus the clamp).  One Arrow stage; all
     bands of an image histogram in a single bincount, and only
     O(non-empty bins) rows leave the executor."""
     if not (bins > 0 and hi > lo):
         raise ValueError("need bins > 0 and hi > lo")
     width = (hi - lo) / bins
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            payload = batch.column("bytes")
-            cols: dict[str, list] = {n: [] for n in _HIST_PA_SCHEMA.names}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-                nb = arr.shape[0]
-                flat = arr.reshape(nb, -1)
-                bidx = np.floor((flat - lo) / width)
-                ok = (bidx >= 0) & (bidx < bins)
-                if nodata is not None:
-                    ok &= flat != nodata
-                band_of = np.broadcast_to(
-                    np.arange(nb, dtype=np.int64)[:, None], flat.shape
-                )
-                key = band_of[ok] * bins + bidx[ok].astype(np.int64)
-                counts = np.bincount(key, minlength=nb * bins)
-                nz = np.flatnonzero(counts)
-                cols["image_id"].extend([ids[ri]] * nz.size)
-                cols["band"].extend((nz // bins).tolist())
-                cols["bin"].extend((nz % bins).tolist())
-                cols["count"].extend(counts[nz].tolist())
-            if cols["image_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols[f.name], type=f.type)
-                        for f in _HIST_PA_SCHEMA
-                    ],
-                    schema=_HIST_PA_SCHEMA,
-                )
+    def row_fn(row: dict):
+        arr = codec.decode(row["bytes"]).astype(np.float64)
+        nb = arr.shape[0]
+        flat = arr.reshape(nb, -1)
+        bidx = np.floor((flat - lo) / width)
+        ok = (bidx >= 0) & (bidx < bins)
+        if nodata is not None:
+            ok &= flat != nodata
+        band_of = np.broadcast_to(np.arange(nb, dtype=np.int64)[:, None], flat.shape)
+        key = band_of[ok] * bins + bidx[ok].astype(np.int64)
+        counts = np.bincount(key, minlength=nb * bins)
+        nz = np.flatnonzero(counts)
+        yield {"image_id": row["image_id"], "band": nz // bins, "bin": nz % bins,
+               "count": counts[nz]}
 
-    return images.select("image_id", "bytes").mapInArrow(run, schema=HIST_SCHEMA)
+    return arrowio.map_rows(images.select("image_id", "bytes"), row_fn, HIST_SCHEMA)

@@ -3,8 +3,8 @@ BuildOverviews semantics) as one 1->N Arrow emission.
 
 The reference writes full-resolution GTiffs only; GDAL users call
 ``BuildOverviews([2, 4, 8], 'AVERAGE')`` before serving tiles.  Here
-each image row fans out to one row per factor through the zero-copy
-PayloadBuf emitter: block sums and valid-pixel counts come from two
+each image row fans out to one row per factor in one row-wise Arrow
+stage (operators/arrowio.py): block sums and valid-pixel counts come from two
 ``np.add.reduceat`` passes (the resize_images 'area' kernel made
 nodata-aware), the affine transform scales by the factor, and
 partial edge blocks average over their real pixel count (GDAL ceil
@@ -28,19 +28,21 @@ from pyspark.sql import DataFrame
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import arrowio
 
-OVERVIEW_FIELDS = [
-    ("image_id", pa.string()),
-    ("level", pa.int32()),
-    ("bytes", pa.binary()),
-    ("w", pa.int32()),
-    ("h", pa.int32()),
-    ("fmt", pa.string()),
-    ("bands", pa.int32()),
-    ("dtype", pa.string()),
-    ("crs", pa.string()),
-    ("transform", pa.list_(pa.float64())),
-    ("nodata", pa.float64()),
-]
+OVERVIEW_SCHEMA = pa.schema(
+    [
+        ("image_id", pa.string()),
+        ("level", pa.int32()),
+        ("bytes", pa.binary()),
+        ("w", pa.int32()),
+        ("h", pa.int32()),
+        ("fmt", pa.string()),
+        ("bands", pa.int32()),
+        ("dtype", pa.string()),
+        ("crs", pa.string()),
+        ("transform", pa.list_(pa.float64())),
+        ("nodata", pa.float64()),
+    ]
+)
 
 
 def _downsample(arr: np.ndarray, f: int, nod):
@@ -85,26 +87,22 @@ def build_overviews(
         nod = row["nodata"]
         for f in factors:
             out = _downsample(arr, f, nod)
-            yield (
-                {
-                    "image_id": row["image_id"],
-                    "level": f,
-                    "w": out.shape[2],
-                    "h": out.shape[1],
-                    "fmt": fmt,
-                    "bands": nb,
-                    "dtype": "float64",
-                    "crs": row["crs"],
-                    "transform": [a * f, 0.0, c, 0.0, e * f, f_],
-                    "nodata": nod,
-                },
-                out,
-                fmt,
-            )
+            yield {
+                "image_id": row["image_id"],
+                "level": f,
+                "w": out.shape[2],
+                "h": out.shape[1],
+                "fmt": fmt,
+                "bands": nb,
+                "dtype": "float64",
+                "crs": row["crs"],
+                "transform": [a * f, 0.0, c, 0.0, e * f, f_],
+                "nodata": nod,
+                "bytes": codec.encode_chunks(out, fmt),
+            }
 
-    return arrowio.flat_map_payload_rows(
-        images,
-        ["image_id", "bytes", "transform", "crs", "nodata"],
+    return arrowio.map_rows(
+        images.select("image_id", "bytes", "transform", "crs", "nodata"),
         rows_fn,
-        OVERVIEW_FIELDS,
+        OVERVIEW_SCHEMA,
     )

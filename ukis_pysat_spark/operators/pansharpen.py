@@ -22,29 +22,12 @@ pattern as change detection; embarrassingly parallel per scene pair.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import arrowio
-
-PANSHARPEN_FIELDS = [
-    ("image_id", pa.string()),
-    ("bytes", pa.binary()),
-    ("w", pa.int32()),
-    ("h", pa.int32()),
-    ("fmt", pa.string()),
-    ("bands", pa.int32()),
-    ("dtype", pa.string()),
-    ("crs", pa.string()),
-    ("transform", pa.list_(pa.float64())),
-    ("nodata", pa.float64()),
-]
-
 
 def pansharpen(
     ms: DataFrame,
@@ -113,27 +96,22 @@ def pansharpen(
         with np.errstate(divide="ignore", invalid="ignore"):
             ratio = np.where(valid, pan_plane / pseudo, 0.0)
         out = np.where(valid[None, :, :], up * ratio[None, :, :], out_nodata)
-        yield (
-            {
-                "image_id": row["image_id"],
-                "w": pw,
-                "h": ph,
-                "fmt": "raw",
-                "bands": nb,
-                "dtype": "float64",
-                "crs": row["crs"],
-                "transform": list(t_pan),
-                "nodata": out_nodata,
-            },
-            out,
-            "raw",
-        )
+        yield {
+            "image_id": row["image_id"],
+            "w": pw,
+            "h": ph,
+            "fmt": "raw",
+            "bands": nb,
+            "dtype": "float64",
+            "crs": row["crs"],
+            "transform": list(t_pan),
+            "nodata": out_nodata,
+            "bytes": codec.encode_chunks(out, "raw"),
+        }
 
-    return arrowio.flat_map_payload_rows(
-        j,
-        ["image_id", "bytes_ms", "transform_ms", "nodata_ms",
-         "bytes_pan", "transform", "crs", "nodata_pan"],
+    return arrowio.map_rows(
+        j.select("image_id", "bytes_ms", "transform_ms", "nodata_ms",
+                 "bytes_pan", "transform", "crs", "nodata_pan"),
         rows_fn,
-        PANSHARPEN_FIELDS,
-        in_payload="bytes_pan",
+        arrowio.RASTER_SCHEMA,
     )

@@ -14,7 +14,7 @@ here it is one distributed plan:
    (``collect_list``), so each image payload crosses exactly one
    equi-join no matter how many points hit it (the zonal_stats
    pattern).
-3. A single ``mapInArrow`` stage decodes each image once, projects all
+3. A single row-wise Arrow stage decodes each image once, projects all
    its points into the image CRS in one vectorized call, inverse-affine
    maps them to pixel indices, and gathers every band with one fancy
    index — only the tiny (point, band, value) rows leave the stage.
@@ -33,21 +33,16 @@ decode + O(points hitting it).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
+from ukis_pysat_spark.operators import arrowio
 from ukis_pysat_spark.operators import spatial_join as sj
 
-SAMPLE_SCHEMA = (
-    "point_id string, image_id string, band int, r int, c int, val double"
-)
-
-_SAMPLE_PA_SCHEMA = pa.schema(
+SAMPLE_SCHEMA = pa.schema(
     [
         ("point_id", pa.string()),
         ("image_id", pa.string()),
@@ -69,77 +64,54 @@ def _is_lonlat(crs: str | None) -> bool:
     return crs.startswith("+proj=longlat")
 
 
-def _sample_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Arrow-native gather: point coordinates are read as zero-copy
-    numpy views of the folded list column (offsets + flat child
-    arrays), per-image output columns stay numpy/Arrow end to end —
-    with hotspot corpora a single stage emits tens of millions of
-    (point, band) rows, so no per-row Python objects are ever built."""
-    for batch in batches:
-        ids = batch.column("image_id").to_pylist()
-        payload = batch.column("bytes")
-        transforms_col = batch.column("transform").to_pylist()
-        crss = batch.column("crs").to_pylist()
-        pts = batch.column("pts")
-        if isinstance(pts, pa.ChunkedArray):
-            pts = pts.combine_chunks()
-        offs = pts.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        flat = pts.values  # StructArray of (pid, plon, plat)
-        pid_all = flat.field("pid")
-        plon_all = flat.field("plon").to_numpy(zero_copy_only=False)
-        plat_all = flat.field("plat").to_numpy(zero_copy_only=False)
-        out: dict[str, list] = {n: [] for n in _SAMPLE_PA_SCHEMA.names}
-        n_rows = 0
-        for ri in range(batch.num_rows):
-            s, e = offs[ri], offs[ri + 1]
-            if s == e:
-                continue
-            arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-            nb, h, w = arr.shape
-            a, _b, c0, _d, e0, f0 = transforms_col[ri]
-            plon = plon_all[s:e]
-            plat = plat_all[s:e]
-            if _is_lonlat(crss[ri]):
-                x, y = plon, plat
-            else:
-                from ukis_pysat_spark.operators.transforms import _fwd
+class _PointsView:
+    """Zero-copy view of the folded ``pts`` list<struct<pid, plon,
+    plat>> column: ``view[ri]`` is row ri's (pid Arrow slice, plon,
+    plat numpy slices) — with hotspot corpora one image carries
+    millions of points, so no per-point Python objects are built."""
 
-                x, y = _fwd(crss[ri], plon, plat)
-            cc = np.floor((x - c0) / a).astype(np.int64)
-            rr = np.floor((y - f0) / e0).astype(np.int64)
-            ok = (cc >= 0) & (cc < w) & (rr >= 0) & (rr < h)
-            if not ok.any():
-                continue
-            sel = np.nonzero(ok)[0]
-            cc, rr = cc[sel], rr[sel]
-            n_ok = sel.size
-            # band-major layout; every column built vectorized
-            take_idx = pa.array(np.tile(sel + s, nb).astype(np.int64))
-            out["point_id"].append(pid_all.take(take_idx))
-            out["image_id"].append(
-                pa.array([ids[ri]], type=pa.string()).take(
-                    pa.array(np.zeros(n_ok * nb, dtype=np.int64))
-                )
-            )
-            out["band"].append(
-                pa.array(np.repeat(np.arange(nb, dtype=np.int32), n_ok))
-            )
-            out["r"].append(pa.array(np.tile(rr.astype(np.int32), nb)))
-            out["c"].append(pa.array(np.tile(cc.astype(np.int32), nb)))
-            out["val"].append(pa.array(arr[:, rr, cc].ravel()))
-            n_rows += n_ok * nb
-            if n_rows >= 1 << 20:  # bound stage memory on hotspot images
-                yield pa.RecordBatch.from_arrays(
-                    [pa.concat_arrays(out[f.name]) for f in _SAMPLE_PA_SCHEMA],
-                    schema=_SAMPLE_PA_SCHEMA,
-                )
-                out = {n: [] for n in _SAMPLE_PA_SCHEMA.names}
-                n_rows = 0
-        if n_rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.concat_arrays(out[f.name]) for f in _SAMPLE_PA_SCHEMA],
-                schema=_SAMPLE_PA_SCHEMA,
-            )
+    def __init__(self, col):
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        self.offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+        flat = col.values
+        self.pid = flat.field("pid")
+        self.plon = flat.field("plon").to_numpy(zero_copy_only=False)
+        self.plat = flat.field("plat").to_numpy(zero_copy_only=False)
+
+    def __getitem__(self, ri: int):
+        s, e = self.offs[ri], self.offs[ri + 1]
+        return self.pid.slice(s, e - s), self.plon[s:e], self.plat[s:e]
+
+
+def _sample_rows(row: dict):
+    """Gather every band at the row's points; output columns stay
+    numpy/Arrow end to end."""
+    pid, plon, plat = row["pts"]
+    if not len(pid):
+        return
+    arr = codec.decode(row["bytes"]).astype(np.float64)
+    nb, h, w = arr.shape
+    a, _b, c0, _d, e0, f0 = row["transform"]
+    if _is_lonlat(row["crs"]):
+        x, y = plon, plat
+    else:
+        from ukis_pysat_spark.operators.transforms import _fwd
+
+        x, y = _fwd(row["crs"], plon, plat)
+    cc = np.floor((x - c0) / a).astype(np.int64)
+    rr = np.floor((y - f0) / e0).astype(np.int64)
+    sel = np.flatnonzero((cc >= 0) & (cc < w) & (rr >= 0) & (rr < h))
+    cc, rr = cc[sel], rr[sel]
+    # band-major layout; every column built vectorized
+    yield {
+        "point_id": pid.take(pa.array(np.tile(sel, nb))),
+        "image_id": row["image_id"],
+        "band": np.repeat(np.arange(nb, dtype=np.int32), sel.size),
+        "r": np.tile(rr, nb),
+        "c": np.tile(cc, nb),
+        "val": arr[:, rr, cc].ravel(),
+    }
 
 
 def sample_points(
@@ -189,4 +161,4 @@ def sample_points(
     joined = images.select("image_id", "bytes", "transform", "crs").join(
         per_img, "image_id"
     )
-    return joined.mapInArrow(_sample_batches, schema=SAMPLE_SCHEMA)
+    return arrowio.map_rows(joined, _sample_rows, SAMPLE_SCHEMA, views={"pts": _PointsView})

@@ -32,8 +32,6 @@ exploits.
 from __future__ import annotations
 
 import math
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -187,23 +185,9 @@ def proximity(
 
 # --- distributed proximity over tiled grids -------------------------------
 
-PROXIMITY_GRID_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, bands int, "
-    "dtype string, crs string, transform array<double>, nodata double"
+_STRIP_SCHEMA = pa.schema(
+    [("dtx", pa.int32()), ("dty", pa.int32()), ("gr", pa.int64()), ("gc", pa.int64())]
 )
-
-_GRID_FIELDS = [
-    ("image_id", pa.string()),
-    ("bytes", pa.binary()),
-    ("w", pa.int32()),
-    ("h", pa.int32()),
-    ("fmt", pa.string()),
-    ("bands", pa.int32()),
-    ("dtype", pa.string()),
-    ("crs", pa.string()),
-    ("transform", pa.list_(pa.float64())),
-    ("nodata", pa.float64()),
-]
 
 
 def proximity_grid(
@@ -241,61 +225,34 @@ def proximity_grid(
     ga, gc0 = grid_transform[0], grid_transform[2]
     ge, gf0 = grid_transform[4], grid_transform[5]
 
-    def strips_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        schema = pa.schema(
-            [
-                ("dtx", pa.int32()),
-                ("dty", pa.int32()),
-                ("gr", pa.int64()),
-                ("gc", pa.int64()),
-            ]
-        )
-        for batch in batches:
-            payload = batch.column("bytes")
-            tcol = batch.column("transform").to_pylist()
-            cols = {n: [] for n in schema.names}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer())
-                plane = arr[min(band, arr.shape[0] - 1)].astype(np.float64)
-                h, w = plane.shape
-                a, _b, c, _d, e, f_ = tcol[ri]
-                tx = int(round((c - gc0) / (ga * tile)))
-                ty = int(round((f_ - gf0) / (ge * tile)))
-                if target_values is None:
-                    tgt = plane != 0.0
-                else:
-                    tgt = np.isin(plane, np.asarray(target_values, float))
-                tr, tc = np.nonzero(tgt)
-                if tr.size == 0:
+    def targets(row: dict):
+        arr = codec.decode(row["bytes"])
+        plane = arr[min(band, arr.shape[0] - 1)].astype(np.float64)
+        if target_values is None:
+            return plane != 0.0
+        return np.isin(plane, np.asarray(target_values, float))
+
+    def strips_fn(row: dict):
+        a, _b, c, _d, e, f_ = row["transform"]
+        tx = int(round((c - gc0) / (ga * tile)))
+        ty = int(round((f_ - gf0) / (ge * tile)))
+        tr, tc = np.nonzero(targets(row))
+        gr = tr.astype(np.int64) + ty * tile
+        gc = tc.astype(np.int64) + tx * tile
+        for dty in (-1, 0, 1):
+            for dtx in (-1, 0, 1):
+                if dtx == 0 and dty == 0:
                     continue
-                gr = tr.astype(np.int64) + ty * tile
-                gc = tc.astype(np.int64) + tx * tile
-                for dty in (-1, 0, 1):
-                    for dtx in (-1, 0, 1):
-                        if dtx == 0 and dty == 0:
-                            continue
-                        # neighbor bbox expanded by k, in global coords
-                        r0 = (ty + dty) * tile - k
-                        r1 = (ty + dty) * tile + tile + k
-                        c0 = (tx + dtx) * tile - k
-                        c1 = (tx + dtx) * tile + tile + k
-                        m = (gr >= r0) & (gr < r1) & (gc >= c0) & (gc < c1)
-                        n = int(m.sum())
-                        if not n:
-                            continue
-                        cols["dtx"].extend([tx + dtx] * n)
-                        cols["dty"].extend([ty + dty] * n)
-                        cols["gr"].extend(gr[m].tolist())
-                        cols["gc"].extend(gc[m].tolist())
-            if cols["dtx"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[n], type=schema.field(n).type) for n in schema.names],
-                    schema=schema,
-                )
+                # neighbor bbox expanded by k, in global coords
+                r0 = (ty + dty) * tile - k
+                r1 = (ty + dty) * tile + tile + k
+                c0 = (tx + dtx) * tile - k
+                c1 = (tx + dtx) * tile + tile + k
+                m = (gr >= r0) & (gr < r1) & (gc >= c0) & (gc < c1)
+                yield {"dtx": tx + dtx, "dty": ty + dty, "gr": gr[m], "gc": gc[m]}
 
     strips = (
-        tiles.select("bytes", "transform")
-        .mapInArrow(strips_fn, schema="dtx int, dty int, gr long, gc long")
+        arrowio.map_rows(tiles.select("bytes", "transform"), strips_fn, _STRIP_SCHEMA)
         .groupBy("dtx", "dty")
         .agg(
             F.collect_list("gr").alias("halo_r"),
@@ -317,15 +274,10 @@ def proximity_grid(
     )
 
     def rows_fn(row: dict):
-        arr = codec.decode(row["bytes"])
-        plane = arr[min(band, arr.shape[0] - 1)].astype(np.float64)
-        h, w = plane.shape
+        tgt = targets(row)
+        h, w = tgt.shape
         a, _b, c, _d, e, f_ = row["transform"]
         tx, ty = row["dtx"], row["dty"]
-        if target_values is None:
-            tgt = plane != 0.0
-        else:
-            tgt = np.isin(plane, np.asarray(target_values, float))
         ext = np.zeros((h + 2 * k, w + 2 * k), dtype=bool)
         ext[k : k + h, k : k + w] = tgt
         if row["halo_r"] is not None:
@@ -335,25 +287,21 @@ def proximity_grid(
             ext[hr[keep], hc[keep]] = True
         dist = np.sqrt(_edt_d2(ext, k))[k : k + h, k : k + w]
         out = np.where(dist > maxdist, fill, dist)[None, :, :]
-        yield (
-            {
-                "image_id": row["image_id"],
-                "w": w,
-                "h": h,
-                "fmt": "raw",
-                "bands": 1,
-                "dtype": "float64",
-                "crs": "grid",
-                "transform": [a, 0.0, c, 0.0, e, f_],
-                "nodata": fill,
-            },
-            out,
-            "raw",
-        )
+        yield {
+            "image_id": row["image_id"],
+            "bytes": codec.encode_chunks(out, "raw"),
+            "w": w,
+            "h": h,
+            "fmt": "raw",
+            "bands": 1,
+            "dtype": "float64",
+            "crs": "grid",
+            "transform": [a, 0.0, c, 0.0, e, f_],
+            "nodata": fill,
+        }
 
-    return arrowio.flat_map_payload_rows(
-        joined,
-        ["image_id", "bytes", "transform", "dtx", "dty", "halo_r", "halo_c"],
+    return arrowio.map_rows(
+        joined.select("image_id", "bytes", "transform", "dtx", "dty", "halo_r", "halo_c"),
         rows_fn,
-        _GRID_FIELDS,
+        arrowio.RASTER_SCHEMA,
     )

@@ -15,7 +15,8 @@ before applying them.  Here the burn is a distributed plan:
    and for each AOI reuse zonal's analyzed-ring machinery
    (``_ring_info`` cache, box / convex half-plane / generic PIP window
    masks) to burn the AOI's value into the covered pixel centers.
-   The payload leaves through the zero-copy PayloadBuf emitter.
+   The payload leaves through the Arrow-stage output buffer
+   (operators/arrowio.py).
 
 Combine rule: overlapping AOIs take the MAXIMUM burn value — unlike
 rasterio's document-order last-wins, max is commutative, so the result
@@ -34,119 +35,96 @@ Output payload is one encoded raster per covered target.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
+from ukis_pysat_spark.operators import arrowio
 from ukis_pysat_spark.operators import spatial_join as sj
-from ukis_pysat_spark.operators.arrowio import PayloadBuf
 from ukis_pysat_spark.operators.zonal import (
     _AoiListView,
     _WinCache,
     _is_lonlat,
 )
 
-RASTERIZE_FIELDS = [
-    ("image_id", pa.string()),
-    ("bytes", pa.binary()),
-    ("w", pa.int32()),
-    ("h", pa.int32()),
-    ("fmt", pa.string()),
-    ("bands", pa.int32()),
-    ("dtype", pa.string()),
-    ("crs", pa.string()),
-    ("transform", pa.list_(pa.float64())),
-    ("nodata", pa.float64()),
-    ("burned", pa.int64()),
-]
-
-RASTERIZE_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, "
-    "bands int, dtype string, crs string, transform array<double>, "
-    "nodata double, burned long"
+RASTERIZE_SCHEMA = pa.schema(
+    [
+        ("image_id", pa.string()),
+        ("bytes", pa.binary()),
+        ("w", pa.int32()),
+        ("h", pa.int32()),
+        ("fmt", pa.string()),
+        ("bands", pa.int32()),
+        ("dtype", pa.string()),
+        ("crs", pa.string()),
+        ("transform", pa.list_(pa.float64())),
+        ("nodata", pa.float64()),
+        ("burned", pa.int64()),
+    ]
 )
 
 
-def _burn_batches(dtype: str, background: float, fmt: str):
+def _burn_rows(dtype: str, background: float, fmt: str):
     np_dtype = np.dtype(dtype)
 
-    def burn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def factory():
         ring_cache: dict = {}
         win_cache = _WinCache()
-        buf = PayloadBuf(RASTERIZE_FIELDS)
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            ws = batch.column("w").to_pylist()
-            hs = batch.column("h").to_pylist()
-            transforms_col = batch.column("transform").to_pylist()
-            crss = batch.column("crs").to_pylist()
-            aois = _AoiListView(batch.column("aois"), extra="burn")
-            burns = aois.extra
-            for ri in range(batch.num_rows):
-                w, h = ws[ri], hs[ri]
-                crs = crss[ri]
-                lonlat = _is_lonlat(crs)
-                tr = transforms_col[ri]
-                tkey = (w, h, tr[0], tr[1], tr[2], tr[3], tr[4], tr[5])
-                canvas = None
-                # AOIs covering the whole canvas fold to ONE max (max is
-                # commutative/associative, so one full-canvas np.maximum
-                # replaces per-AOI passes — same final pixels)
-                full_max = None
-                touched = False
-                partials = []  # (win, val) burns on sub-windows
-                for i in range(aois.offs[ri], aois.offs[ri + 1]):
-                    win = win_cache.get(
-                        ring_cache, aois, i, crs, tkey, tr, w, h, lonlat
-                    )
-                    if win is None:
-                        continue
-                    touched = True
-                    val = np_dtype.type(burns[i])
-                    c0, c1, r0, r1, inside = win
-                    if inside is None and c0 == 0 and r0 == 0 and c1 == w and r1 == h:
-                        full_max = val if full_max is None else max(full_max, val)
-                    else:
-                        partials.append((win, val))
-                if not touched:
-                    continue
-                canvas = np.full((1, h, w), background, dtype=np_dtype)
-                if full_max is not None:
-                    np.maximum(canvas, full_max, out=canvas)
-                for (c0, c1, r0, r1, inside), val in partials:
-                    target = canvas[0, r0:r1, c0:c1]
-                    if inside is None:
-                        np.maximum(target, val, out=target)
-                    else:
-                        target[inside] = np.maximum(target[inside], val)
-                header, body = codec.encode_chunks(canvas, fmt)
-                buf.add(
-                    {
-                        "image_id": ids[ri],
-                        "w": w,
-                        "h": h,
-                        "fmt": fmt,
-                        "bands": 1,
-                        "dtype": dtype,
-                        "crs": crs,
-                        "transform": transforms_col[ri],
-                        "nodata": float(background),
-                        "burned": int(np.count_nonzero(canvas != background)),
-                    },
-                    header,
-                    body,
-                )
-                if buf.nbytes >= (64 << 20):
-                    yield buf.flush()
-                    buf = PayloadBuf(RASTERIZE_FIELDS)
-        if buf.n:
-            yield buf.flush()
 
-    return burn
+        def burn(row: dict):
+            w, h = row["w"], row["h"]
+            crs = row["crs"]
+            lonlat = _is_lonlat(crs)
+            tr = row["transform"]
+            tkey = (w, h, tr[0], tr[1], tr[2], tr[3], tr[4], tr[5])
+            aois, idx = row["aois"]
+            # AOIs covering the whole canvas fold to ONE max (max is
+            # commutative/associative, so one full-canvas np.maximum
+            # replaces per-AOI passes — same final pixels)
+            full_max = None
+            touched = False
+            partials = []  # (win, val) burns on sub-windows
+            for i in idx:
+                win = win_cache.get(ring_cache, aois, i, crs, tkey, tr, w, h, lonlat)
+                if win is None:
+                    continue
+                touched = True
+                val = np_dtype.type(aois.extra[i])
+                c0, c1, r0, r1, inside = win
+                if inside is None and c0 == 0 and r0 == 0 and c1 == w and r1 == h:
+                    full_max = val if full_max is None else max(full_max, val)
+                else:
+                    partials.append((win, val))
+            if not touched:
+                return
+            canvas = np.full((1, h, w), background, dtype=np_dtype)
+            if full_max is not None:
+                np.maximum(canvas, full_max, out=canvas)
+            for (c0, c1, r0, r1, inside), val in partials:
+                target = canvas[0, r0:r1, c0:c1]
+                if inside is None:
+                    np.maximum(target, val, out=target)
+                else:
+                    target[inside] = np.maximum(target[inside], val)
+            yield {
+                "image_id": row["image_id"],
+                "bytes": codec.encode_chunks(canvas, fmt),
+                "w": w,
+                "h": h,
+                "fmt": fmt,
+                "bands": 1,
+                "dtype": dtype,
+                "crs": crs,
+                "transform": tr,
+                "nodata": float(background),
+                "burned": int(np.count_nonzero(canvas != background)),
+            }
+
+        return burn
+
+    return factory
 
 
 def rasterize(
@@ -200,6 +178,10 @@ def rasterize(
     joined = targets.select("image_id", "w", "h", "transform", "crs").join(
         per_img, "image_id"
     )
-    return joined.mapInArrow(
-        _burn_batches(dtype, background, fmt), schema=RASTERIZE_SCHEMA
+    return arrowio.map_rows(
+        joined,
+        _burn_rows(dtype, background, fmt),
+        RASTERIZE_SCHEMA,
+        views={"aois": lambda col: _AoiListView(col, extra="burn")},
+        per_partition=True,
     )

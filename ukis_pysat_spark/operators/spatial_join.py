@@ -14,8 +14,9 @@ north rule's core operator:
 2. PRE-REFINE: a relational bbox-overlap test (pure JVM expressions)
    eliminates most false candidates without touching Python.
 3. REFINE: exact polygon-polygon intersection (vertex-in-or-on +
-   edge-crossing, pure numpy) inside an Arrow-batched UDF restores
-   exact semantics — output rows match a brute-force O(n*m) oracle.
+   edge-crossing, pure numpy) inside a chunked Arrow stage
+   (operators/arrowio.py) restores exact semantics — output rows match
+   a brute-force O(n*m) oracle.
 
 Boundary semantics are CLOSED engine-wide: 'intersects' means 'share
 any point', boundary included — the relational <=/>= box-box fast path
@@ -35,10 +36,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
-from ukis_pysat_spark.operators import geometry
+from ukis_pysat_spark.operators import arrowio, geometry
 
 DEFAULT_RES = 12  # ~0.09 deg cells: tens of cells per fixture footprint
 
@@ -259,22 +262,6 @@ def sat_box_separated(axes: Column, x0, x1, y0, y1) -> Column:
                 + F.least(e["ny"] * y0, e["ny"] * y1)
             )
         ),
-    )
-
-
-def scene_bounds(images: DataFrame) -> DataFrame:
-    """Relational scene bbox from (transform, w, h) — no pixel decode."""
-    a = F.get("transform", 0)
-    c = F.get("transform", 2)
-    e = F.get("transform", 4)
-    f_ = F.get("transform", 5)
-    return images.withColumns(
-        {
-            "img_lon_min": c,
-            "img_lon_max": c + F.col("w").cast("double") * a,
-            "img_lat_max": f_,
-            "img_lat_min": f_ + F.col("h").cast("double") * e,
-        }
     )
 
 
@@ -502,71 +489,62 @@ def spatial_join(
             "footprint_lon", "footprint_lat", "ring_lon", "ring_lat",
         )
     )
-    return decided_ids.unionByName(
-        hard.mapInArrow(_refine_batches, schema="image_id string, aoi_id string")
-    )
+    return decided_ids.unionByName(arrowio.run(hard, _refine_batches, PAIR_SCHEMA))
 
 
-_REFINE_CHUNK = 1 << 16  # rows per vectorized refine call
+PAIR_SCHEMA = pa.schema([("image_id", pa.string()), ("aoi_id", pa.string())])
+# distinct geometry pairs whose verdicts a refine task caches (~60 MB)
+VERDICT_CACHE_MAX = 200_000
 
 
 def _ring_views(col) -> list:
     """ListArray -> per-row numpy views (values buffer + offsets, zero
     per-row copies).  Handles sliced arrays: `values` is the full child
     array, so the window [offsets[0], offsets[-1]) is cut first."""
-    import pyarrow as pa
-
     arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
     offsets = arr.offsets.to_numpy()
     values = arr.values.to_numpy(zero_copy_only=False)[offsets[0] : offsets[-1]]
     return np.split(values, offsets[1:-1] - offsets[0])
 
 
+def _refine(tbl: pa.Table, geom_col: str, out_cols: list, keep_fn):
+    """Shared refine frame: rows whose `geom_col` is null were decided
+    exactly by the relational bbox test and pass as id copies; the rest
+    keep where ``keep_fn(hard rows)`` says so."""
+    pre = pc.is_null(tbl.column(geom_col))
+    yield from tbl.filter(pre).select(out_cols).combine_chunks().to_batches()
+    hard = tbl.filter(pc.invert(pre)).combine_chunks()
+    if hard.num_rows:
+        kept = hard.select(out_cols).filter(pa.array(keep_fn(hard)))
+        yield from kept.combine_chunks().to_batches()
+
+
 def _refine_batches(batches):
     """Exact polygon-polygon refinement (geometry.polygon_intersects_
-    pairwise) as an Arrow-native stage.
-
-    The session caps Arrow batches at 128 rows to protect payload
-    operators, but refine rows are tiny — at millions of candidate
-    pairs the per-batch cost is the whole game.  So this runs under
-    ``mapInArrow`` (round 5; the pandas version paid ~1.5 s/160k-scene
-    join just materializing per-row list objects into object columns),
-    appends raw RecordBatches, and processes accumulated chunks with
-    Arrow-level filters + numpy views over the list buffers.
+    pairwise) as a chunked Arrow stage: the session caps Arrow batches
+    at 128 rows to protect payload operators, but refine rows are tiny,
+    so candidates are vectorized over large accumulated chunks with
+    numpy views over the list buffers — no per-row list objects.
 
     Verdicts are MEMOIZED per distinct geometry pair (r7): co-
     registered scene stacks repeat footprints exactly, so a hotspot's
     millions of (same footprint, same AOI) candidate pairs pay one PIP
     each — the cache key is the raw coordinate bytes, so equality is
     exact, never hash-trusted."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     verdicts: dict[bytes, bool] = {}
 
-    def process(tbl: pa.Table):
-        # null geometry marks a pair pre-proven by the relational
-        # box-box bbox test — id-copy fast path, no PIP
-        pre = pc.is_null(tbl.column("footprint_lon"))
-        ids = tbl.select(["image_id", "aoi_id"])
-        if pc.all(pre).as_py():
-            for b in ids.combine_chunks().to_batches():
-                yield b
-            return
-        for b in ids.filter(pre).combine_chunks().to_batches():
-            yield b
-        hard = tbl.filter(pc.invert(pre)).combine_chunks()
+    def keep_fn(hard: pa.Table) -> np.ndarray:
         fl = _ring_views(hard.column("footprint_lon"))
         fa = _ring_views(hard.column("footprint_lat"))
         rl = _ring_views(hard.column("ring_lon"))
         ra = _ring_views(hard.column("ring_lat"))
-        nh = len(fl)
         keys = [
             fl[i].tobytes() + fa[i].tobytes() + b"|" + rl[i].tobytes() + ra[i].tobytes()
-            for i in range(nh)
+            for i in range(len(fl))
         ]
-        keep = np.empty(nh, dtype=bool)
-        miss = [i for i, k in enumerate(keys) if verdicts.get(k) is None]
+        if len(verdicts) > VERDICT_CACHE_MAX:  # bound worker memory
+            verdicts.clear()
+        miss = [i for i, k in enumerate(keys) if k not in verdicts]
         if miss:
             got = geometry.polygon_intersects_pairwise(
                 [fl[i] for i in miss],
@@ -574,28 +552,13 @@ def _refine_batches(batches):
                 [rl[i] for i in miss],
                 [ra[i] for i in miss],
             )
-            if len(verdicts) > 200_000:  # bound worker memory (~60 MB)
-                verdicts.clear()
             for i, v in zip(miss, got):
                 verdicts[keys[i]] = bool(v)
-        for i, k in enumerate(keys):
-            keep[i] = verdicts[k]
-        kept = hard.select(["image_id", "aoi_id"]).filter(pa.array(keep))
-        for b in kept.combine_chunks().to_batches():
-            yield b
+        return np.fromiter((verdicts[k] for k in keys), dtype=bool, count=len(keys))
 
-    buf: list[pa.RecordBatch] = []
-    n = 0
-    for batch in batches:
-        if not batch.num_rows:
-            continue
-        buf.append(batch)
-        n += batch.num_rows
-        if n >= _REFINE_CHUNK:
-            yield from process(pa.Table.from_batches(buf))
-            buf, n = [], 0
-    if buf:
-        yield from process(pa.Table.from_batches(buf))
+    return arrowio.chunked(
+        batches, lambda tbl: _refine(tbl, "footprint_lon", ["image_id", "aoi_id"], keep_fn)
+    )
 
 
 def spatial_join_bruteforce(images: DataFrame, aois: DataFrame) -> DataFrame:
@@ -605,7 +568,7 @@ def spatial_join_bruteforce(images: DataFrame, aois: DataFrame) -> DataFrame:
     cand = images.select("image_id", "footprint_lon", "footprint_lat").crossJoin(
         F.broadcast(aois.select("aoi_id", "ring_lon", "ring_lat"))
     )
-    return cand.mapInArrow(_refine_batches, schema="image_id string, aoi_id string")
+    return arrowio.run(cand, _refine_batches, PAIR_SCHEMA)
 
 
 def points_in_aois(
@@ -681,45 +644,19 @@ def points_in_aois(
     if not exact:
         return cand.select(*out_cols)
 
+    def keep_fn(hard: pa.Table) -> np.ndarray:
+        return geometry.points_in_rings_pairwise(
+            hard.column(lon_col).to_numpy(),
+            hard.column(lat_col).to_numpy(),
+            _ring_views(hard.column("ring_lon")),
+            _ring_views(hard.column("ring_lat")),
+        )
+
     def refine(batches):
-        """Arrow-native PIP refine (round 5, same shape as the
-        polygon-polygon _refine_batches): RecordBatch accumulation into
-        large chunks, pairwise PIP over list-buffer views — no pandas,
-        no per-row list objects.  Only hard (non-box) pairs reach this
-        stage since r7's branch split; the null-ring guard is kept for
-        robustness."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        def process(tbl: pa.Table):
-            pre = pc.is_null(tbl.column("ring_lon"))
-            ids = tbl.select(out_cols)
-            if pc.all(pre).as_py():  # box AOIs: bbox test already exact
-                yield from ids.combine_chunks().to_batches()
-                return
-            yield from ids.filter(pre).combine_chunks().to_batches()
-            hard = tbl.filter(pc.invert(pre)).combine_chunks()
-            keep = geometry.points_in_rings_pairwise(
-                hard.column(lon_col).to_numpy(),
-                hard.column(lat_col).to_numpy(),
-                _ring_views(hard.column("ring_lon")),
-                _ring_views(hard.column("ring_lat")),
-            )
-            kept = hard.select(out_cols).filter(pa.array(keep))
-            yield from kept.combine_chunks().to_batches()
-
-        buf: list[pa.RecordBatch] = []
-        n = 0
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            buf.append(batch)
-            n += batch.num_rows
-            if n >= _REFINE_CHUNK:
-                yield from process(pa.Table.from_batches(buf))
-                buf, n = [], 0
-        if buf:
-            yield from process(pa.Table.from_batches(buf))
+        """Exact PIP refine over large chunks (the _refine_batches
+        frame); only hard (non-box) pairs reach it since r7's branch
+        split, the null-ring guard is kept for robustness."""
+        return arrowio.chunked(batches, lambda tbl: _refine(tbl, "ring_lon", out_cols, keep_fn))
 
     # branch split at the Python boundary (r7, the spatial_join
     # pattern): box-AOI pairs are DECIDED by the bbox test above, so
@@ -731,9 +668,6 @@ def points_in_aois(
     hard = cand.filter(~F.col("_abox")).select(
         id_col, lon_col, lat_col, "aoi_id", "ring_lon", "ring_lat"
     )
-    coord_schema = f", {lon_col} double, {lat_col} double" if keep_coords else ""
-    return decided_ids.unionByName(
-        hard.mapInArrow(
-            refine, schema=f"{id_col} string{coord_schema}, aoi_id string"
-        )
-    )
+    coords = [(lon_col, pa.float64()), (lat_col, pa.float64())] if keep_coords else []
+    out = pa.schema([(id_col, pa.string()), *coords, ("aoi_id", pa.string())])
+    return decided_ids.unionByName(arrowio.run(hard, refine, out))

@@ -22,9 +22,9 @@ Two physical strategies, chosen by what the query needs:
                    reaches the parquet scan).  Use for counting, geometry,
                    and joining tiles spatially.
 
-``tile_pixels``    Arrow-batched ``mapInPandas`` that decodes each image
-                   once, slices every window from the in-memory array and
-                   emits encoded tile payloads.  One decode per image per
+``tile_pixels``    one row-wise Arrow stage (operators/arrowio.py) that
+                   decodes each image once, slices every window from the
+                   in-memory array and emits encoded tile payloads.  One decode per image per
                    stage (the reference instead re-materializes a GTiff
                    after every op, raster.py:189-213).
 
@@ -36,19 +36,29 @@ bounds (11.903960582768779, 51.45624717410995, 11.904589403469808,
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
+from ukis_pysat_spark.operators import arrowio
 
-TILE_PIXELS_SCHEMA = (
-    "image_id string, tile_id long, col_off int, row_off int, "
-    "tw int, th int, left double, bottom double, right double, top double, "
-    "px binary, caption string"
+TILE_PIXELS_SCHEMA = pa.schema(
+    [
+        ("image_id", pa.string()),
+        ("tile_id", pa.int64()),
+        ("col_off", pa.int32()),
+        ("row_off", pa.int32()),
+        ("tw", pa.int32()),
+        ("th", pa.int32()),
+        ("left", pa.float64()),
+        ("bottom", pa.float64()),
+        ("right", pa.float64()),
+        ("top", pa.float64()),
+        ("px", pa.binary()),
+        ("caption", pa.string()),
+    ]
 )
 
 
@@ -126,103 +136,6 @@ def enumerate_windows(w: int, h: int, width: int, height: int, overlap: int) -> 
     return np.column_stack([tile_id, c0, r0, c1 - c0, r1 - r0])
 
 
-_PA_SCHEMA = pa.schema(
-    [
-        ("image_id", pa.string()),
-        ("tile_id", pa.int64()),
-        ("col_off", pa.int32()),
-        ("row_off", pa.int32()),
-        ("tw", pa.int32()),
-        ("th", pa.int32()),
-        ("left", pa.float64()),
-        ("bottom", pa.float64()),
-        ("right", pa.float64()),
-        ("top", pa.float64()),
-        ("px", pa.binary()),
-        ("caption", pa.string()),
-    ]
-)
-
-
-class _TileBuf:
-    """Accumulates per-shape-group column chunks and flushes them as ONE
-    pyarrow RecordBatch with a native binary `px` array built directly
-    from (offsets, values) buffers — no pandas block assembly, no Python
-    bytes objects per tile."""
-
-    def __init__(self):
-        self.cols: dict[str, list[np.ndarray]] = {
-            k: [] for k in ("tile_id", "col_off", "row_off", "tw", "th",
-                            "left", "bottom", "right", "top")
-        }
-        self.ids: list[tuple[str, str, int]] = []  # (image_id, caption, n)
-        self.px_values: list[np.ndarray] = []  # uint8 payload chunks
-        # (n_tiles, bytes_per_tile) — bytes_per_tile is an int for the
-        # uniform bulk path or an int64 array of per-tile lengths for
-        # variable-size encodings (rawz/q8 payload sizes differ per tile)
-        self.px_sizes: list[tuple[int, int | np.ndarray]] = []
-        self.n = 0
-        self.nbytes = 0
-
-    def add(self, image_id, caption, chunk_cols, payload, n, sz):
-        for k, v in chunk_cols.items():
-            self.cols[k].append(v)
-        self.ids.append((image_id, caption, n))
-        self.px_values.append(payload)
-        self.px_sizes.append((n, sz))
-        self.n += n
-        self.nbytes += payload.nbytes
-
-    def flush(self) -> pa.RecordBatch:
-        if self.nbytes >= (1 << 31):  # pa.binary() carries int32 offsets
-            raise ValueError(
-                "tile batch exceeds 2 GiB of payload; lower FLUSH_BYTES or "
-                "tile size (a single image's tiles must fit one batch)"
-            )
-        lengths = np.concatenate(
-            [
-                sz if isinstance(sz, np.ndarray) else np.full(n, sz, dtype=np.int64)
-                for n, sz in self.px_sizes
-            ]
-        )
-        offsets = np.empty(self.n + 1, dtype=np.int32)
-        offsets[0] = 0
-        np.cumsum(lengths, out=offsets[1:])
-        values = np.concatenate(self.px_values)
-        px = pa.Array.from_buffers(
-            pa.binary(), self.n, [None, pa.py_buffer(offsets), pa.py_buffer(values)]
-        )
-        ids = pa.array(
-            np.repeat(
-                np.array([i for i, _, _ in self.ids], dtype=object),
-                [n for _, _, n in self.ids],
-            ),
-            type=pa.string(),
-        )
-        caps = pa.array(
-            np.repeat(
-                np.array([c for _, c, _ in self.ids], dtype=object),
-                [n for _, _, n in self.ids],
-            ),
-            type=pa.string(),
-        )
-        arrs = [
-            ids,
-            pa.array(np.concatenate(self.cols["tile_id"])),
-            pa.array(np.concatenate(self.cols["col_off"])),
-            pa.array(np.concatenate(self.cols["row_off"])),
-            pa.array(np.concatenate(self.cols["tw"])),
-            pa.array(np.concatenate(self.cols["th"])),
-            pa.array(np.concatenate(self.cols["left"])),
-            pa.array(np.concatenate(self.cols["bottom"])),
-            pa.array(np.concatenate(self.cols["right"])),
-            pa.array(np.concatenate(self.cols["top"])),
-            px,
-            caps,
-        ]
-        return pa.RecordBatch.from_arrays(arrs, schema=_PA_SCHEMA)
-
-
 def tile_pixels(
     images: DataFrame,
     width: int = 256,
@@ -234,23 +147,17 @@ def tile_pixels(
     """Pixel-emitting tiling: decode once per image, slice every window,
     emit encoded tile payloads.
 
-    Physical strategy: ``mapInArrow`` — tile payloads are written into
-    ONE contiguous uint8 buffer per (image, window-shape) group (header
-    broadcast + strided body copy, zero per-tile Python) and exposed to
-    Arrow as a binary array over that buffer.  The pandas object-column
-    path this replaced spent most of its wall clock on block assembly
-    and per-tile bytes objects.
+    Physical strategy: one row-wise Arrow stage — tile payloads are
+    written into ONE contiguous uint8 buffer per (image, window-shape)
+    group (header broadcast + strided body copy, zero per-tile Python)
+    and handed to the stage's output buffer as packed payloads.
 
     band=None keeps all bands; band=k extracts a single band like the
     reference's get_subset(tile, band) (raster.py:507-519).
     """
 
-    # memory bound: yield accumulated tile rows once they exceed this
-    # many payload bytes, independent of the Arrow input batch size
-    FLUSH_BYTES = 32 << 20
-
-    def encode_group(arr, sub, th, tw, bands, dt):
-        """(n, header+body) uint8 matrix for one window-shape group."""
+    def encode_group(arr, sub, th, tw, bands, dt) -> arrowio.Packed:
+        """The encoded tiles of one window-shape group."""
         view = np.lib.stride_tricks.sliding_window_view(arr, (th, tw), axis=(1, 2))
         block = view[:, sub[:, 2], sub[:, 1]]  # (bands, n, th, tw)
         block = block.transpose(1, 0, 2, 3).astype(dt, copy=False)
@@ -262,73 +169,46 @@ def tile_pixels(
             out = np.empty((n, hlen + sz), dtype=np.uint8)
             out[:, :hlen] = np.frombuffer(header, dtype=np.uint8)
             out[:, hlen:] = np.ascontiguousarray(block).view(np.uint8).reshape(n, sz)
-            return out.reshape(-1), n, hlen + sz
-        # compressed/lossy formats (rawz/q8): per-tile encode.  Payload
-        # sizes differ per tile in practice, so the buffer carries the
-        # actual per-tile lengths — flush() builds the binary offsets
-        # from their cumsum (uniform sizes collapse to the scalar form).
+            return arrowio.Packed(out.reshape(-1), hlen + sz)
+        # compressed/lossy formats (rawz/q8): per-tile encode; payload
+        # sizes differ per tile, so the per-tile lengths ride along
         bufs = [codec.encode(np.ascontiguousarray(block[j]), out_fmt) for j in range(n)]
         sizes = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=n)
-        payload = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-        if n and (sizes == sizes[0]).all():
-            return payload, n, int(sizes[0])
-        return payload, n, sizes
+        return arrowio.Packed(np.frombuffer(b"".join(bufs), dtype=np.uint8), sizes)
 
-    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf = _TileBuf()
-        for batch in batches:
-            col_bytes = batch.column("bytes")
-            col_id = batch.column("image_id")
-            col_cap = batch.column("caption")
-            col_w = batch.column("w").to_numpy(zero_copy_only=False)
-            col_h = batch.column("h").to_numpy(zero_copy_only=False)
-            col_t = batch.column("transform")
-            for ri in range(batch.num_rows):
-                arr = codec.decode(col_bytes[ri].as_buffer())
-                t = col_t[ri].as_py()
-                a, _, c, _, e, f = t[0], t[1], t[2], t[3], t[4], t[5]
-                wins = enumerate_windows(int(col_w[ri]), int(col_h[ri]), width, height, overlap)
-                src = arr if band is None else arr[band : band + 1]
-                bands = src.shape[0]
-                dt = src.dtype.newbyteorder("<")
-                # group windows by clipped shape (at most 4 groups)
-                shape_key = wins[:, 4] * np.int64(1 << 32) + wins[:, 3]
-                order = np.argsort(shape_key, kind="stable")
-                wins = wins[order]
-                shape_key = shape_key[order]
-                starts = np.flatnonzero(np.r_[True, shape_key[1:] != shape_key[:-1]])
-                ends = np.r_[starts[1:], wins.shape[0]]
-                image_id = col_id[ri].as_py()
-                caption = col_cap[ri].as_py()
-                for s, epos in zip(starts, ends):
-                    sub = wins[s:epos]
-                    th, tw = int(sub[0, 4]), int(sub[0, 3])
-                    payload, n, sz = encode_group(src, sub, th, tw, bands, dt)
-                    left = c + sub[:, 1] * a
-                    top = f + sub[:, 2] * e
-                    buf.add(
-                        image_id,
-                        caption,
-                        {
-                            "tile_id": sub[:, 0],
-                            "col_off": sub[:, 1].astype(np.int32),
-                            "row_off": sub[:, 2].astype(np.int32),
-                            "tw": sub[:, 3].astype(np.int32),
-                            "th": sub[:, 4].astype(np.int32),
-                            "left": left,
-                            "bottom": top + sub[:, 4] * e,
-                            "right": left + sub[:, 3] * a,
-                            "top": top,
-                        },
-                        payload,
-                        n,
-                        sz,
-                    )
-                if buf.nbytes >= FLUSH_BYTES:
-                    yield buf.flush()
-                    buf = _TileBuf()
-        if buf.n:
-            yield buf.flush()
+    def row_fn(row: dict):
+        arr = codec.decode(row["bytes"])
+        a, _, c, _, e, f = row["transform"][:6]
+        wins = enumerate_windows(row["w"], row["h"], width, height, overlap)
+        src = arr if band is None else arr[band : band + 1]
+        bands = src.shape[0]
+        dt = src.dtype.newbyteorder("<")
+        # group windows by clipped shape (at most 4 groups)
+        shape_key = wins[:, 4] * np.int64(1 << 32) + wins[:, 3]
+        order = np.argsort(shape_key, kind="stable")
+        wins = wins[order]
+        shape_key = shape_key[order]
+        starts = np.flatnonzero(np.r_[True, shape_key[1:] != shape_key[:-1]])
+        ends = np.r_[starts[1:], wins.shape[0]]
+        for s, epos in zip(starts, ends):
+            sub = wins[s:epos]
+            th, tw = int(sub[0, 4]), int(sub[0, 3])
+            left = c + sub[:, 1] * a
+            top = f + sub[:, 2] * e
+            yield {
+                "image_id": row["image_id"],
+                "caption": row["caption"],
+                "tile_id": sub[:, 0],
+                "col_off": sub[:, 1],
+                "row_off": sub[:, 2],
+                "tw": sub[:, 3],
+                "th": sub[:, 4],
+                "left": left,
+                "bottom": top + sub[:, 4] * e,
+                "right": left + sub[:, 3] * a,
+                "top": top,
+                "px": encode_group(src, sub, th, tw, bands, dt),
+            }
 
     cols = ["image_id", "bytes", "w", "h", "transform", "caption"]
-    return images.select(*cols).mapInArrow(emit, schema=TILE_PIXELS_SCHEMA)
+    return arrowio.map_rows(images.select(*cols), row_fn, TILE_PIXELS_SCHEMA)

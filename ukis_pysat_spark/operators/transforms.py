@@ -1,11 +1,9 @@
 """Per-pixel / per-image raster transforms (reference P2-P10).
 
-All operators share one execution harness: an Arrow-native
-``mapInArrow`` stage (operators/arrowio.py) that decodes each image's
-payload ONCE (zero-copy from the Arrow buffer), applies a chain of
-numpy transforms, and appends the re-encoded payload into a shared
-native binary buffer — no pandas block assembly, no per-row Python
-bytes objects.  Chaining transforms through :func:`compose` keeps one
+All operators run as one row-wise Arrow stage (operators/arrowio.py)
+that decodes each image's payload ONCE (zero-copy from the Arrow
+buffer), applies a chain of numpy transforms, and hands the re-encoded
+payload back to the stage's output buffer.  Chaining transforms through :func:`compose` keeps one
 decode/encode per *stage* — the reference instead round-trips the whole
 raster through an in-memory GTiff after every mutation
 (ukis_pysat/raster.py:189-213), which is the per-op tax this design
@@ -48,17 +46,16 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import arrowio
-from ukis_pysat_spark.operators.arrowio import IMAGES_OUT_SCHEMA, META_COLS as _META_COLS
+from ukis_pysat_spark.operators.arrowio import IMAGES_SCHEMA, META_COLS as _META_COLS
 
 # A transform takes (arr, meta) and returns (arr, meta); meta is a dict
 # with keys transform (list[6]), nodata, crs.
@@ -66,10 +63,9 @@ TransformFn = Callable[[np.ndarray, dict], tuple[np.ndarray, dict]]
 
 
 def apply_transforms(images: DataFrame, fns: list[TransformFn], out_fmt: str | None = None) -> DataFrame:
-    """Run a chain of transforms with ONE decode + ONE encode per image
-    (Arrow-native emitter, see operators/arrowio.py)."""
+    """Run a chain of transforms with ONE decode + ONE encode per image."""
 
-    def row_fn(row: dict) -> tuple[dict, np.ndarray, str]:
+    def row_fn(row: dict):
         arr = codec.decode(row["bytes"])
         meta = {
             "transform": list(row["transform"]),
@@ -95,8 +91,8 @@ def apply_transforms(images: DataFrame, fns: list[TransformFn], out_fmt: str | N
         except ValueError:  # CRS without an analytic inverse
             fp_lon, fp_lat = None, None
         d = dict(row)
-        d.pop("bytes")
         d.update(
+            bytes=codec.encode_chunks(arr, fmt),
             w=int(w2),
             h=int(h2),
             fmt=fmt,
@@ -108,9 +104,9 @@ def apply_transforms(images: DataFrame, fns: list[TransformFn], out_fmt: str | N
             footprint_lon=fp_lon,
             footprint_lat=fp_lat,
         )
-        return d, arr, fmt
+        yield d
 
-    return arrowio.map_image_rows(images, _META_COLS, row_fn)
+    return arrowio.map_rows(images.select(*_META_COLS), row_fn, IMAGES_SCHEMA)
 
 
 def compose(*fns: TransformFn) -> list[TransformFn]:
@@ -289,50 +285,36 @@ def equalize(levels: int = 256) -> TransformFn:
 # --- P4: valid-data bbox ---------------------------------------------------
 
 
+_BBOX_SCHEMA = pa.schema(
+    [("image_id", pa.string()), ("left", pa.float64()),
+     ("bottom", pa.float64()), ("right", pa.float64()),
+     ("top", pa.float64())]
+)
+
+
 def valid_data_bbox(images: DataFrame, nodata: float = 0.0) -> DataFrame:
     """Tightest geo bbox of pixels != nodata across all bands
     (rasterio.windows.get_data_window semantics, raster.py:104-111).
-    Returns (image_id, left, bottom, right, top).  One mapInArrow
-    stage: payloads enter as zero-copy buffer views and the four
-    doubles leave as columnar lists — no pandas anywhere."""
-    import pyarrow as pa
+    Returns (image_id, left, bottom, right, top); an image with no
+    valid pixel gets a zero-size box at its origin."""
 
-    out_pa = pa.schema(
-        [("image_id", pa.string()), ("left", pa.float64()),
-         ("bottom", pa.float64()), ("right", pa.float64()),
-         ("top", pa.float64())]
-    )
+    def row_fn(row: dict):
+        valid = (codec.decode(row["bytes"]) != nodata).any(axis=0)
+        rows_any = np.flatnonzero(valid.any(axis=1))
+        cols_any = np.flatnonzero(valid.any(axis=0))
+        a, _, c, _, e, f_ = row["transform"]
+        if rows_any.size == 0:
+            r0 = r1 = c0 = c1 = 0
+        else:
+            r0, r1 = int(rows_any[0]), int(rows_any[-1]) + 1
+            c0, c1 = int(cols_any[0]), int(cols_any[-1]) + 1
+        yield {
+            "image_id": row["image_id"], "left": c + c0 * a,
+            "bottom": f_ + r1 * e, "right": c + c1 * a, "top": f_ + r0 * e,
+        }
 
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            trans = batch.column("transform").to_pylist()
-            payload = batch.column("bytes")
-            cols: dict[str, list] = {n: [] for n in out_pa.names}
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer())
-                valid = (arr != nodata).any(axis=0)
-                rows_any = np.flatnonzero(valid.any(axis=1))
-                cols_any = np.flatnonzero(valid.any(axis=0))
-                a, _, c, _, e, f_ = trans[ri]
-                if rows_any.size == 0:
-                    r0 = r1 = c0 = c1 = 0
-                else:
-                    r0, r1 = int(rows_any[0]), int(rows_any[-1]) + 1
-                    c0, c1 = int(cols_any[0]), int(cols_any[-1]) + 1
-                cols["image_id"].append(ids[ri])
-                cols["left"].append(c + c0 * a)
-                cols["bottom"].append(f_ + r1 * e)
-                cols["right"].append(c + c1 * a)
-                cols["top"].append(f_ + r0 * e)
-            if cols["image_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], f.type) for f in out_pa],
-                    schema=out_pa,
-                )
-
-    return images.select("image_id", "bytes", "transform").mapInArrow(
-        run, schema="image_id string, left double, bottom double, right double, top double"
+    return arrowio.map_rows(
+        images.select("image_id", "bytes", "transform"), row_fn, _BBOX_SCHEMA
     )
 
 
@@ -533,6 +515,39 @@ def dn2toa_arrays(
     )
 
 
+# the rescale-factor columns dn2toa_arrays reads from the metadata table
+_DN2TOA_META = [
+    "sun_elevation", "mult_reflectance", "add_reflectance",
+    "mult_radiance", "add_radiance", "k1", "k2",
+    "quantification_value", "radio_add_offset",
+    "processing_baseline", "thermal_band_idx",
+]
+
+
+def _row_toa(row: dict, wavelengths) -> np.ndarray:
+    return dn2toa_arrays(
+        codec.decode(row["bytes"]), row["platform"], row["sun_elevation"],
+        row["mult_reflectance"], row["add_reflectance"],
+        row["mult_radiance"], row["add_radiance"], row["k1"], row["k2"],
+        row["thermal_band_idx"], row["quantification_value"],
+        row["radio_add_offset"], row["processing_baseline"],
+        wavelengths=wavelengths,
+    )
+
+
+_TOA_STATS_SCHEMA = pa.schema(
+    [
+        ("image_id", pa.string()),
+        ("band", pa.int32()),
+        ("mean", pa.float64()),
+        ("std", pa.float64()),
+        ("min", pa.float64()),
+        ("max", pa.float64()),
+        ("n_valid", pa.int64()),
+    ]
+)
+
+
 def dn2toa(
     images: DataFrame,
     metadata: DataFrame,
@@ -545,43 +560,20 @@ def dn2toa(
     image/scene, no payload) — broadcast it so the transform stage is
     shuffle-free.  `wavelengths` selects bands via the platform lookup
     table (reference dn2toa(wavelengths=...), raster.py:276,424-483).
-    Payloads are emitted through the Arrow-native buffer
-    (operators/arrowio.py) — no pandas, no per-row bytes objects.
     """
     joined = images.join(F.broadcast(metadata.drop("platform")), "image_id")
 
-    meta_cols = [
-        "sun_elevation", "mult_reflectance", "add_reflectance",
-        "mult_radiance", "add_radiance", "k1", "k2",
-        "quantification_value", "radio_add_offset",
-        "processing_baseline", "thermal_band_idx",
-    ]
-
-    def row_fn(row: dict) -> tuple[dict, np.ndarray, str]:
-        toa = dn2toa_arrays(
-            codec.decode(row["bytes"]),
-            row["platform"],
-            row["sun_elevation"],
-            row["mult_reflectance"],
-            row["add_reflectance"],
-            row["mult_radiance"],
-            row["add_radiance"],
-            row["k1"],
-            row["k2"],
-            row["thermal_band_idx"],
-            row["quantification_value"],
-            row["radio_add_offset"],
-            row["processing_baseline"],
-            wavelengths=wavelengths,
-        )
+    def row_fn(row: dict):
+        toa = _row_toa(row, wavelengths)
         fmt = out_fmt or row["fmt"]
-        d = {k: row[k] for k in _META_COLS if k != "bytes"}
-        d["fmt"] = fmt
-        d["dtype"] = "float32"
-        d["bands"] = int(toa.shape[0])
-        return d, toa, fmt
+        yield dict(
+            row, bytes=codec.encode_chunks(toa, fmt), fmt=fmt, dtype="float32",
+            bands=int(toa.shape[0]),
+        )
 
-    return arrowio.map_image_rows(joined, _META_COLS + meta_cols, row_fn)
+    return arrowio.map_rows(
+        joined.select(*_META_COLS, *_DN2TOA_META), row_fn, IMAGES_SCHEMA
+    )
 
 
 def dn2toa_stats(
@@ -597,67 +589,23 @@ def dn2toa_stats(
         "image_id", "bytes", "platform",
     ).join(F.broadcast(metadata.drop("platform")), "image_id")
 
-    meta_cols = [
-        "sun_elevation", "mult_reflectance", "add_reflectance",
-        "mult_radiance", "add_radiance", "k1", "k2",
-        "quantification_value", "radio_add_offset",
-        "processing_baseline", "thermal_band_idx",
-    ]
+    def row_fn(row: dict):
+        toa = _row_toa(row, wavelengths).astype(np.float64)
+        nb = toa.shape[0]
+        yield {
+            "image_id": row["image_id"],
+            "band": np.arange(nb),
+            "mean": toa.mean(axis=(1, 2)),
+            "std": toa.std(axis=(1, 2)),
+            "min": toa.min(axis=(1, 2)),
+            "max": toa.max(axis=(1, 2)),
+            "n_valid": toa.shape[1] * toa.shape[2],
+        }
 
-    _stats_schema = pa.schema(
-        [
-            ("image_id", pa.string()),
-            ("band", pa.int32()),
-            ("mean", pa.float64()),
-            ("std", pa.float64()),
-            ("min", pa.float64()),
-            ("max", pa.float64()),
-            ("n_valid", pa.int64()),
-        ]
-    )
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # single mapInArrow stage (round 5; matches decode_stats): the
-        # payload enters as zero-copy buffer views and the tiny stats
-        # rows assemble as columnar lists -> one RecordBatch per input
-        # batch — no pandas block assembly of 128-row payload batches
-        for batch in batches:
-            names = [n for n in batch.schema.names if n != "bytes"]
-            lists = [batch.column(n).to_pylist() for n in names]
-            payload = batch.column("bytes")
-            cols: dict[str, list] = {f.name: [] for f in _stats_schema}
-            for ri in range(batch.num_rows):
-                row = {n: ls[ri] for n, ls in zip(names, lists)}
-                toa = dn2toa_arrays(
-                    codec.decode(payload[ri].as_buffer()), row["platform"],
-                    row["sun_elevation"], row["mult_reflectance"],
-                    row["add_reflectance"], row["mult_radiance"],
-                    row["add_radiance"], row["k1"], row["k2"],
-                    row["thermal_band_idx"], row["quantification_value"],
-                    row["radio_add_offset"], row["processing_baseline"],
-                    wavelengths=wavelengths,
-                ).astype(np.float64)
-                nb = toa.shape[0]
-                npx = int(toa.shape[1] * toa.shape[2])
-                cols["image_id"].extend([row["image_id"]] * nb)
-                cols["band"].extend(range(nb))
-                cols["mean"].extend(toa.mean(axis=(1, 2)).tolist())
-                cols["std"].extend(toa.std(axis=(1, 2)).tolist())
-                cols["min"].extend(toa.min(axis=(1, 2)).tolist())
-                cols["max"].extend(toa.max(axis=(1, 2)).tolist())
-                cols["n_valid"].extend([npx] * nb)
-            if cols["image_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in _stats_schema],
-                    schema=_stats_schema,
-                )
-
-    return joined.select("image_id", "bytes", "platform", *meta_cols).mapInArrow(
-        run,
-        schema=(
-            "image_id string, band int, mean double, std double, "
-            "min double, max double, n_valid long"
-        ),
+    return arrowio.map_rows(
+        joined.select("image_id", "bytes", "platform", *_DN2TOA_META),
+        row_fn,
+        _TOA_STATS_SCHEMA,
     )
 
 

@@ -14,7 +14,7 @@ plan that never materializes masked rasters:
    (``collect_list`` of its AOIs) — so each image payload crosses the
    join exactly once no matter how many AOIs hit it.  The folded side
    is id+rings only; AQE broadcasts it when small.
-3. A single ``mapInArrow`` stage decodes each image ONCE, and for each
+3. A single row-wise Arrow stage decodes each image ONCE, and for each
    of its AOIs: bounds the AOI to a pixel window (floor/ceil of the
    geometry bounds, mask_bbox's exact snap rule), tests window pixel
    CENTERS against the ring (closed-boundary PIP; axis-aligned rings
@@ -36,23 +36,17 @@ nodata pixels are excluded from the stats (decode_stats convention);
 from __future__ import annotations
 
 import math
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ukis_pysat_spark import codec
+from ukis_pysat_spark.operators import arrowio
 from ukis_pysat_spark.operators import spatial_join as sj
 from ukis_pysat_spark.operators.geometry import points_in_polygon
 
-ZONAL_SCHEMA = (
-    "image_id string, aoi_id string, band int, n_valid long, "
-    "sum double, mean double, min double, max double"
-)
-
-_ZONAL_PA_SCHEMA = pa.schema(
+ZONAL_SCHEMA = pa.schema(
     [
         ("image_id", pa.string()),
         ("aoi_id", pa.string()),
@@ -239,7 +233,8 @@ class _AoiListView:
     arrays in Arrow, converted per element on ring-cache miss only.
     Offsets are absolute into the child arrays (pyarrow slices keep
     the full child), so ``range(offs[ri], offs[ri+1])`` indexes
-    ``ids``/``ring(i)`` directly."""
+    ``ids``/``ring(i)`` directly; ``view[ri]`` is that (view, range)
+    pair, the per-row value the Arrow stage hands a row function."""
 
     __slots__ = ("offs", "ids", "_lon", "_lat", "extra")
 
@@ -254,6 +249,9 @@ class _AoiListView:
         self.extra = (
             flat.field(extra).to_numpy(zero_copy_only=False) if extra else None
         )
+
+    def __getitem__(self, ri: int):
+        return self, range(self.offs[ri], self.offs[ri + 1])
 
     def ring(self, i: int):
         return (
@@ -347,84 +345,78 @@ def _aoi_window_mask(info, transform, w: int, h: int, lonlat: bool):
     return c0, c1, r0, r1, inside
 
 
-def _stats_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _image_windows(row: dict, ring_cache: dict, win_cache: _WinCache):
+    """Decode one image row and clip each of its AOIs to the grid:
+    (arr, nodata, [(aoi_id, window)] for partial windows, [aoi_id] for
+    AOIs covering the whole grid)."""
+    arr = codec.decode(row["bytes"]).astype(np.float64)
+    _nb, h, w = arr.shape
+    crs = row["crs"]
+    lonlat = _is_lonlat(crs)
+    tr = row["transform"]
+    tkey = (w, h, tr[0], tr[1], tr[2], tr[3], tr[4], tr[5])
+    aois, idx = row["aois"]
+    partial, full_ids = [], []
+    for i in idx:
+        win = win_cache.get(ring_cache, aois, i, crs, tkey, tr, w, h, lonlat)
+        if win is None:
+            continue
+        c0, c1, r0, r1, inside = win
+        if inside is None and c0 == 0 and r0 == 0 and c1 == w and r1 == h:
+            full_ids.append(aois.ids[i])
+        else:
+            partial.append((aois.ids[i], win))
+    return arr, row["nodata"], partial, full_ids
+
+
+def _repeat_ids(aoi_ids: list, k: int) -> np.ndarray:
+    """Each AOI id k times: the aoi_id column of per-band rows shared by
+    several AOIs (AOI-major, band-minor)."""
+    return np.repeat(np.array(aoi_ids, dtype=object), k)
+
+
+def _stats_rows():
     ring_cache: dict = {}
     win_cache = _WinCache()
-    num_names = ("n_valid", "sum", "mean", "min", "max")
-    for batch in batches:
-        ids = batch.column("image_id").to_pylist()
-        payload = batch.column("bytes")
-        transforms_col = batch.column("transform").to_pylist()
-        nodatas = batch.column("nodata").to_pylist()
-        crss = batch.column("crs").to_pylist()
-        aois = _AoiListView(batch.column("aois"))
-        # chunked accumulation: string columns as python-list chunks,
-        # numeric columns as numpy chunks, concatenated once per batch
-        sid: list = []
-        said: list = []
-        sband: list = []
-        nums: dict[str, list] = {n: [] for n in num_names}
-        for ri in range(batch.num_rows):
-            arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-            nb, h, w = arr.shape
-            nod = nodatas[ri]
-            crs = crss[ri]
-            lonlat = _is_lonlat(crs)
-            tr = transforms_col[ri]
-            tkey = (w, h, tr[0], tr[1], tr[2], tr[3], tr[4], tr[5])
-            full_ids: list = []  # AOIs covering the whole grid share one stat
-            for i in range(aois.offs[ri], aois.offs[ri + 1]):
-                win = win_cache.get(ring_cache, aois, i, crs, tkey, tr, w, h, lonlat)
-                if win is None:
-                    continue
-                c0, c1, r0, r1, inside = win
-                if inside is None and c0 == 0 and r0 == 0 and c1 == w and r1 == h:
-                    full_ids.append(aois.ids[i])
-                    continue
-                n, s1, mn, mx = _window_stats(arr[:, r0:r1, c0:c1], inside, nod)
-                keep = n > 0
-                if not keep.any():
-                    continue
-                nk = int(keep.sum())
-                sid.append([ids[ri]] * nk)
-                said.append([aois.ids[i]] * nk)
-                sband.append(np.nonzero(keep)[0].astype(np.int32))
-                nums["n_valid"].append(n[keep])
-                nums["sum"].append(s1[keep])
-                nums["mean"].append((s1 / np.maximum(n, 1))[keep])
-                nums["min"].append(mn[keep])
-                nums["max"].append(mx[keep])
-            if full_ids:
-                n, s1, mn, mx = _window_stats(arr, None, nod)
-                keep = n > 0
-                if keep.any():
-                    bidx = np.nonzero(keep)[0].astype(np.int32)
-                    nk = bidx.size
-                    kf = len(full_ids)
-                    sid.append([ids[ri]] * (nk * kf))
-                    if nk == 1:
-                        said.append(full_ids)
-                    else:
-                        said.append([a for a in full_ids for _ in range(nk)])
-                    sband.append(np.tile(bidx, kf))
-                    mean = s1 / np.maximum(n, 1)
-                    nums["n_valid"].append(np.tile(n[keep], kf))
-                    nums["sum"].append(np.tile(s1[keep], kf))
-                    nums["mean"].append(np.tile(mean[keep], kf))
-                    nums["min"].append(np.tile(mn[keep], kf))
-                    nums["max"].append(np.tile(mx[keep], kf))
-        if sid:
-            arrays = [
-                pa.array([v for chunk in sid for v in chunk], type=pa.string()),
-                pa.array([v for chunk in said for v in chunk], type=pa.string()),
-                pa.array(np.concatenate(sband)),
-                pa.array(np.concatenate(nums["n_valid"]).astype(np.int64)),
-                pa.array(np.concatenate(nums["sum"])),
-                pa.array(np.concatenate(nums["mean"])),
-                pa.array(np.concatenate(nums["min"])),
-                pa.array(np.concatenate(nums["max"])),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=_ZONAL_PA_SCHEMA)
+
+    def chunk(image_id, aoi_ids: list, stats) -> dict:
+        n, s1, mn, mx = stats
+        keep = n > 0
+        k = len(aoi_ids)
+        return {
+            "image_id": image_id, "aoi_id": _repeat_ids(aoi_ids, int(keep.sum())),
+            "band": np.tile(np.flatnonzero(keep), k), "n_valid": np.tile(n[keep], k),
+            "sum": np.tile(s1[keep], k), "mean": np.tile((s1 / np.maximum(n, 1))[keep], k),
+            "min": np.tile(mn[keep], k), "max": np.tile(mx[keep], k),
+        }
+
+    def row_fn(row: dict):
+        arr, nod, partial, full_ids = _image_windows(row, ring_cache, win_cache)
+        for aid, (c0, c1, r0, r1, inside) in partial:
+            yield chunk(row["image_id"], [aid], _window_stats(arr[:, r0:r1, c0:c1], inside, nod))
+        if full_ids:  # AOIs covering the whole grid share one stat
+            yield chunk(row["image_id"], full_ids, _window_stats(arr, None, nod))
+
+    return row_fn
+
+
+def _zonal_stage(images: DataFrame, aois: DataFrame, res, factory, schema) -> DataFrame:
+    """Fold each image's bbox-candidate AOIs into one list column and
+    run the per-image zonal row function over it."""
+    pairs = sj.candidate_pairs(
+        images.select("image_id", "footprint_lon", "footprint_lat"), aois, res=res
+    )
+    per_img = (
+        pairs.join(aois.select("aoi_id", "ring_lon", "ring_lat"), "aoi_id")
+        .groupBy("image_id")
+        .agg(F.collect_list(F.struct("aoi_id", "ring_lon", "ring_lat")).alias("aois"))
+    )
+    joined = images.select(
+        "image_id", "bytes", "transform", "nodata", "crs"
+    ).join(per_img, "image_id")
+    return arrowio.map_rows(
+        joined, factory, schema, views={"aois": _AoiListView}, per_partition=True
+    )
 
 
 def zonal_stats(
@@ -448,26 +440,10 @@ def zonal_stats(
     (r7): output rows exist only where the window mask finds >= 1
     inside pixel center, so a false candidate contributes nothing and
     the exact-refine machinery is pure overhead here."""
-    pairs = sj.candidate_pairs(
-        images.select("image_id", "footprint_lon", "footprint_lat"), aois, res=res
-    )
-    per_img = (
-        pairs.join(aois.select("aoi_id", "ring_lon", "ring_lat"), "aoi_id")
-        .groupBy("image_id")
-        .agg(F.collect_list(F.struct("aoi_id", "ring_lon", "ring_lat")).alias("aois"))
-    )
-    joined = images.select(
-        "image_id", "bytes", "transform", "nodata", "crs"
-    ).join(per_img, "image_id")
-    return joined.mapInArrow(_stats_batches, schema=ZONAL_SCHEMA)
+    return _zonal_stage(images, aois, res, _stats_rows, ZONAL_SCHEMA)
 
 
-ZONAL_MODE_SCHEMA = (
-    "image_id string, aoi_id string, band int, mode double, "
-    "n_mode long, n_valid long"
-)
-
-_MODE_PA_SCHEMA = pa.schema(
+ZONAL_MODE_SCHEMA = pa.schema(
     [
         ("image_id", pa.string()),
         ("aoi_id", pa.string()),
@@ -479,95 +455,46 @@ _MODE_PA_SCHEMA = pa.schema(
 )
 
 
-def _mode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _modes(block: np.ndarray, nod):
+    """Per-band (band, mode, n_mode, n_valid) columns for an (nb, k)
+    value block; unique is ascending, so the FIRST argmax is the
+    smallest tied value."""
+    out = []
+    for b in range(block.shape[0]):
+        vals = block[b]
+        if nod is not None:
+            vals = vals[vals != nod]
+        if vals.size == 0:
+            continue
+        uq, cnts = np.unique(vals, return_counts=True)
+        k = int(np.argmax(cnts))
+        out.append((b, float(uq[k]), int(cnts[k]), int(vals.size)))
+    return [list(c) for c in zip(*out)] if out else [[], [], [], []]
+
+
+def _mode_rows():
     ring_cache: dict = {}
     win_cache = _WinCache()
-    for batch in batches:
-        ids = batch.column("image_id").to_pylist()
-        payload = batch.column("bytes")
-        transforms_col = batch.column("transform").to_pylist()
-        nodatas = batch.column("nodata").to_pylist()
-        crss = batch.column("crs").to_pylist()
-        aois = _AoiListView(batch.column("aois"))
-        sid: list = []
-        said: list = []
-        sband: list = []
-        smode: list = []
-        snmode: list = []
-        snvalid: list = []
-        for ri in range(batch.num_rows):
-            arr = codec.decode(payload[ri].as_buffer()).astype(np.float64)
-            nb, h, w = arr.shape
-            nod = nodatas[ri]
-            crs = crss[ri]
-            lonlat = _is_lonlat(crs)
-            tr = transforms_col[ri]
-            tkey = (w, h, tr[0], tr[1], tr[2], tr[3], tr[4], tr[5])
 
-            def _modes(sub):
-                """Per-band (b, mode, n_mode, n_valid) for a (nb, k)
-                value block; unique is ascending, so the FIRST argmax
-                is the smallest tied value."""
-                out = []
-                for b in range(nb):
-                    vals = sub[b]
-                    if nod is not None:
-                        vals = vals[vals != nod]
-                    if vals.size == 0:
-                        continue
-                    uq, cnts = np.unique(vals, return_counts=True)
-                    k = int(np.argmax(cnts))
-                    out.append((b, float(uq[k]), int(cnts[k]), int(vals.size)))
-                return out
+    def chunk(image_id, aoi_ids: list, modes) -> dict:
+        band, mode, n_mode, n_valid = modes
+        k = len(aoi_ids)
+        return {"image_id": image_id, "aoi_id": _repeat_ids(aoi_ids, len(band)),
+                "band": band * k, "mode": mode * k, "n_mode": n_mode * k,
+                "n_valid": n_valid * k}
 
-            def _emit(aid: str, rows) -> None:
-                for b, mode, n_mode, n_valid in rows:
-                    sid.append(ids[ri])
-                    said.append(aid)
-                    sband.append(b)
-                    smode.append(mode)
-                    snmode.append(n_mode)
-                    snvalid.append(n_valid)
+    def row_fn(row: dict):
+        arr, nod, partial, full_ids = _image_windows(row, ring_cache, win_cache)
+        nb = arr.shape[0]
+        for aid, (c0, c1, r0, r1, inside) in partial:
+            sub = arr[:, r0:r1, c0:c1].reshape(nb, -1)
+            if inside is not None:
+                sub = sub[:, inside.ravel()]
+            yield chunk(row["image_id"], [aid], _modes(sub, nod))
+        if full_ids:  # AOIs covering the whole grid share one result
+            yield chunk(row["image_id"], full_ids, _modes(arr.reshape(nb, -1), nod))
 
-            full_ids: list = []
-            flat = arr.reshape(nb, -1)
-            for i in range(aois.offs[ri], aois.offs[ri + 1]):
-                win = win_cache.get(ring_cache, aois, i, crs, tkey, tr, w, h, lonlat)
-                if win is None:
-                    continue
-                c0, c1, r0, r1, inside = win
-                if inside is None and c0 == 0 and r0 == 0 and c1 == w and r1 == h:
-                    full_ids.append(aois.ids[i])
-                    continue
-                sub = arr[:, r0:r1, c0:c1].reshape(nb, -1)
-                if inside is not None:
-                    sub = sub[:, inside.ravel()]
-                _emit(aois.ids[i], _modes(sub))
-            if full_ids:
-                rows = _modes(flat)
-                if rows:
-                    kf = len(full_ids)
-                    nk = len(rows)
-                    sid.extend([ids[ri]] * (nk * kf))
-                    if nk == 1:
-                        said.extend(full_ids)
-                    else:
-                        said.extend([a for a in full_ids for _ in range(nk)])
-                    bcol, mcol, nmcol, nvcol = zip(*rows)
-                    sband.extend(list(bcol) * kf)
-                    smode.extend(list(mcol) * kf)
-                    snmode.extend(list(nmcol) * kf)
-                    snvalid.extend(list(nvcol) * kf)
-        if sid:
-            arrays = [
-                pa.array(sid, type=pa.string()),
-                pa.array(said, type=pa.string()),
-                pa.array(sband, type=pa.int32()),
-                pa.array(smode, type=pa.float64()),
-                pa.array(snmode, type=pa.int64()),
-                pa.array(snvalid, type=pa.int64()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=_MODE_PA_SCHEMA)
+    return row_fn
 
 
 def zonal_mode(
@@ -581,26 +508,9 @@ def zonal_mode(
     break to the SMALLEST value (total, partitioning-independent).
     Same fused plan as :func:`zonal_stats`: bbox candidate pairs on ids
     (the window mask is the exact test — see zonal_stats), rings fold
-    to one row per image, one mapInArrow stage decodes each image
+    to one row per image, one row-wise Arrow stage decodes each image
     once.  Returns (image_id, aoi_id, band, mode, n_mode, n_valid)."""
-    pairs = sj.candidate_pairs(
-        images.select("image_id", "footprint_lon", "footprint_lat"), aois, res=res
-    )
-    per_img = (
-        pairs.join(aois.select("aoi_id", "ring_lon", "ring_lat"), "aoi_id")
-        .groupBy("image_id")
-        .agg(F.collect_list(F.struct("aoi_id", "ring_lon", "ring_lat")).alias("aois"))
-    )
-    joined = images.select(
-        "image_id", "bytes", "transform", "nodata", "crs"
-    ).join(per_img, "image_id")
-    return joined.mapInArrow(_mode_batches, schema=ZONAL_MODE_SCHEMA)
-
-
-ZONAL_GRID_SCHEMA = (
-    "aoi_id string, band int, n_valid long, sum double, mean double, "
-    "min double, max double, n_tiles long"
-)
+    return _zonal_stage(images, aois, res, _mode_rows, ZONAL_MODE_SCHEMA)
 
 
 def zonal_stats_grid(

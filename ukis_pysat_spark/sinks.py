@@ -3,8 +3,9 @@
 The reference casts the in-memory array (including the ``'min'``
 minimal-dtype choice, raster.py:555-556) and writes one GTiff with a
 driver/compression profile.  The engine's sink is a table write: the
-payload is cast + re-encoded per row in one Arrow stage, then the rows
-land in Parquet (zstd) — or any table format the caller points at.
+payload is cast + re-encoded per row in one row-wise Arrow stage
+(operators/arrowio.py), then the rows land in Parquet (zstd) — or any
+table format the caller points at.
 Payload-level compression maps to the codec's ``rawz`` format; columnar
 compression is the Parquet codec.
 """
@@ -12,31 +13,28 @@ compression is the Parquet codec.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ukis_pysat_spark import codec
 from ukis_pysat_spark.operators import arrowio
-from ukis_pysat_spark.operators.arrowio import META_COLS as _META_COLS
+from ukis_pysat_spark.operators.arrowio import IMAGES_SCHEMA, META_COLS as _META_COLS
 
 
 def cast_images(images: DataFrame, dtype: str = "min", out_fmt: str | None = None) -> DataFrame:
     """Cast every payload to `dtype` ('min' = smallest dtype representing
     the values, per image — reference raster.py:555-556) and re-encode,
-    updating the dtype/fmt metadata columns.  One decode+encode per row,
-    emitted through the Arrow-native buffer (operators/arrowio.py).
+    updating the dtype/fmt metadata columns.  One decode+encode per row.
     """
 
-    def row_fn(row: dict) -> tuple[dict, np.ndarray, str]:
+    def row_fn(row: dict):
         arr = codec.decode(row["bytes"])
         dt = codec.minimum_dtype(arr) if dtype == "min" else dtype
         out = arr.astype(np.dtype(dt), copy=False)
         fmt = out_fmt or row["fmt"]
-        d = {k: row[k] for k in _META_COLS if k != "bytes"}
-        d["dtype"] = str(out.dtype)
-        d["fmt"] = fmt
-        return d, out, fmt
+        yield dict(row, bytes=codec.encode_chunks(out, fmt), dtype=str(out.dtype), fmt=fmt)
 
-    return arrowio.map_image_rows(images, _META_COLS, row_fn)
+    return arrowio.map_rows(images.select(*_META_COLS), row_fn, IMAGES_SCHEMA)
 
 
 def write_images(
@@ -65,10 +63,14 @@ def write_images(
 # compress, raster.py:535-580): the engine's payloads leave as real
 # GeoTIFF files — one strip-organized GTiff per image row, written by
 # sources/geotiff.write_geotiff (pure-numpy container writer, TIFF 6.0
-# / GeoTIFF 1.1).  All stages are Arrow-batched mapInArrow/mapInPandas;
-# nothing collects to the driver, so the sink scales with partitions.
+# / GeoTIFF 1.1).  The stages are Arrow stages (operators/arrowio.py) or
+# mapInPandas; nothing collects to the driver, so the sink scales with
+# partitions.
 
-_GTIFF_SCHEMA = "image_id string, caption string, n_bytes long, tiff binary"
+_GTIFF_SCHEMA = pa.schema(
+    [("image_id", pa.string()), ("caption", pa.string()),
+     ("n_bytes", pa.int64()), ("tiff", pa.binary())]
+)
 _GTIFF_COLS = ["image_id", "bytes", "caption", "transform", "crs", "nodata"]
 
 
@@ -84,48 +86,26 @@ def to_geotiff(
     smallest representing dtype per image (reference raster.py:555),
     anything else casts.  Composable: write the result to Parquet /
     Iceberg for a blob table, or hand it to write_geotiff_files."""
-    import pyarrow as pa
-
     from ukis_pysat_spark.sources.geotiff import write_geotiff
 
-    out_schema = pa.schema(
-        [("image_id", pa.string()), ("caption", pa.string()),
-         ("n_bytes", pa.int64()), ("tiff", pa.binary())]
-    )
+    def row_fn(row: dict):
+        arr = codec.decode(row["bytes"])
+        if dtype == "min":
+            arr = arr.astype(codec.minimum_dtype(arr), copy=False)
+        elif dtype is not None:
+            arr = arr.astype(np.dtype(dtype), copy=False)
+        tiff = write_geotiff(
+            arr,
+            transform=row["transform"],
+            crs=row["crs"],
+            nodata=row["nodata"],
+            compression=compression,
+            predictor=predictor,
+        )
+        yield {"image_id": row["image_id"], "caption": row["caption"],
+               "n_bytes": len(tiff), "tiff": tiff}
 
-    def run(batches):
-        for batch in batches:
-            ids = batch.column("image_id").to_pylist()
-            caps = batch.column("caption").to_pylist()
-            trans = batch.column("transform").to_pylist()
-            crss = batch.column("crs").to_pylist()
-            nods = batch.column("nodata").to_pylist()
-            payload = batch.column("bytes")
-            tiffs = []
-            for ri in range(batch.num_rows):
-                arr = codec.decode(payload[ri].as_buffer())
-                if dtype == "min":
-                    arr = arr.astype(codec.minimum_dtype(arr), copy=False)
-                elif dtype is not None:
-                    arr = arr.astype(np.dtype(dtype), copy=False)
-                tiffs.append(
-                    write_geotiff(
-                        arr,
-                        transform=trans[ri],
-                        crs=crss[ri],
-                        nodata=nods[ri],
-                        compression=compression,
-                        predictor=predictor,
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()), pa.array(caps, pa.string()),
-                 pa.array([len(t) for t in tiffs], pa.int64()),
-                 pa.array(tiffs, pa.binary())],
-                schema=out_schema,
-            )
-
-    return images.select(*_GTIFF_COLS).mapInArrow(run, schema=_GTIFF_SCHEMA)
+    return arrowio.map_rows(images.select(*_GTIFF_COLS), row_fn, _GTIFF_SCHEMA)
 
 
 def from_geotiff(blobs: DataFrame, tiff_col: str = "tiff", fmt: str = "raw") -> DataFrame:
@@ -133,8 +113,7 @@ def from_geotiff(blobs: DataFrame, tiff_col: str = "tiff", fmt: str = "raw") -> 
     GeoTIFF (sources/geotiff.read_geotiff), re-encode with the engine
     codec, rebuild the geo columns from the parsed tags.  The read twin
     of to_geotiff — to_geotiff |> from_geotiff is a lossless loop.
-    Arrow-native: each blob enters as a zero-copy buffer view and the
-    re-encoded payloads leave through the chunked ImagesBuf."""
+    Each blob enters as a zero-copy buffer view (operators/arrowio.py)."""
     import pyspark.sql.functions as F
 
     from ukis_pysat_spark.datagen import phash64
@@ -146,7 +125,7 @@ def from_geotiff(blobs: DataFrame, tiff_col: str = "tiff", fmt: str = "raw") -> 
         lon0, lat0 = t[2], t[5]
         lon1 = lon0 + arr.shape[2] * t[0]
         lat1 = lat0 + arr.shape[1] * t[4]
-        d = {
+        yield {
             "image_id": row["image_id"],
             "w": int(arr.shape[2]),
             "h": int(arr.shape[1]),
@@ -161,15 +140,15 @@ def from_geotiff(blobs: DataFrame, tiff_col: str = "tiff", fmt: str = "raw") -> 
             "footprint_lon": [lon0, lon1, lon1, lon0, lon0],
             "footprint_lat": [lat0, lat0, lat1, lat1, lat0],
             "platform": "",
+            "bytes": codec.encode_chunks(arr, fmt),
         }
-        return d, arr, fmt
 
     src = blobs.select(
         "image_id",
         (F.col("caption") if "caption" in blobs.columns else F.col("image_id")).alias("caption"),
         F.col(tiff_col).alias("bytes"),
     )
-    return arrowio.map_image_rows(src, ["image_id", "caption", "bytes"], row_fn)
+    return arrowio.map_rows(src, row_fn, IMAGES_SCHEMA)
 
 
 def write_geotiff_files(
